@@ -1110,7 +1110,7 @@ def q_doc_chain_clusters(spark, sf_dir):
     """Adversarial duplicate_clusters shape: a 10k-node PATH graph
     (diameter 10k — the worst case for label propagation). Pointer jumping
     must converge in O(log n) rounds to the shortlex-min survivor '0';
-    a linear implementation would blow the max_iters bound instead."""
+    a linear implementation would hit fixpoint.MAX_ROUNDS instead."""
     n = 10_000
     pairs = spark.range(n - 1).select(
         F.col("id").alias("a"), (F.col("id") + 1).alias("b")

@@ -17,8 +17,9 @@ are designed around shuffle economics at 10^12-document scale:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
+from rdf2hk_spark import fixpoint
 from rdf2hk_spark.ops import tokens
 from rdf2hk_spark.ops.hashing import md5_int_py, md5s
 
@@ -104,7 +105,8 @@ def word_shingles(
 def minhash_signatures(shingles: DataFrame, num_hashes: int = 16) -> DataFrame:
     """K minhashes per doc via the linear-permutation family (see
     ``minhash_perm_consts``): integer minima, engine-portable.
-    → (id, hidx, minh: bigint)."""
+    → (id, hidx, minh: bigint). The long-format reference the map-side
+    paths (``minhash_signature_rows``, ``lsh_band_keys``) must match."""
     a, b, c = minhash_perm_consts(num_hashes)
     base = _base_hash_pair(shingles)
     hashed = base.select(
@@ -207,7 +209,7 @@ def lsh_band_keys(
     """(id, band, bkey) band keys: banding-before-shuffle. The signature
     shuffle carries one wide row per doc, band keys are a map-side
     projection on top, and the bucket groupBy that follows carries ``bands``
-    rows/doc — versus the ``lsh_candidate_pairs`` signature path whose
+    rows/doc — versus banding ``minhash_signatures`` output, whose
     groupBy(id, band) adds a second ``num_hashes``-rows/doc shuffle. Keys
     are byte-identical (same sorted "hidx:minh" concatenation, same md5)."""
     wide = _wide_signature(df, id_col, text_col, k, num_hashes)
@@ -240,19 +242,20 @@ def capped_member_lists(
     min_n: int = 2,
     salt: int = 16,
 ) -> DataFrame:
-    """(keys..., n, ids) per group with ``min_n <= n <= cap``, with
-    HARD-BOUNDED aggregation buffers under key skew.
+    """(keys..., n, ids) per group with ``min_n <= n <= cap``, with a
+    bounded phase-2 merge buffer under key skew.
 
     A plain ``groupBy(keys).agg(collect_list(id))`` materializes a viral
     key's FULL member list in one reducer buffer before the size filter can
     drop it — at corpus scale a boilerplate shingle / flooded LSH bucket is
     millions of ids in one aggregation buffer (sort-based fallback spills
     rows, but the emitted array for one key must still fit in memory).
-    Two salted phases bound it: phase 1 aggregates per (keys, xxhash64(id)
-    mod salt) — each buffer holds only that salt slice — and phase 2 merges
+    Two salted phases split it: phase 1 aggregates per (keys, xxhash64(id)
+    mod salt), so each of its buffers holds one salt slice — still about
+    |group|/salt ids for a viral key, NOT bounded by ``cap``. Phase 2 merges
     the ≤``salt`` partials per key, slicing every partial to ``cap``+1
-    elements first, so a viral key's merge buffer holds at most
-    salt·(cap+1) ids instead of its full membership. Groups that survive
+    elements first; only this merge buffer is bounded, at salt·(cap+1) ids
+    instead of the key's full membership. Groups that survive
     the filter are never truncated: n ≤ cap implies every partial list has
     ≤ cap elements, below the slice. The salt key is DETERMINISTIC
     (xxhash64 of the id, not rand()), so task retries re-produce the same
@@ -275,17 +278,17 @@ def capped_member_lists(
     )
 
 
-def _pairs_from_keys(keys: DataFrame, max_bucket: int) -> DataFrame:
-    """Sized-bucket pairing shared by both LSH paths: ONE bucket-keyed
-    groupBy yields the size cap and the member list, and pairs explode
-    MAP-SIDE from the list (nested explode of the same row — bounded by
-    max_bucket² per bucket, the same bound as before). The previous shape
-    exploded the members into two frames and re-joined them on the bucket
-    key — two more bucket-keyed exchanges per call for the identical pair
-    set. Only the final cross-band pair dedup shuffles. Member lists come
-    from the skew-bounded salted aggregation (``capped_member_lists``), so
-    a flooded bucket never holds its full membership in one reducer
-    buffer."""
+def lsh_candidate_pairs_from_keys(
+    keys: DataFrame, max_bucket: int = 50
+) -> DataFrame:
+    """Candidate pairs (a, b), a < b, from map-side band keys (see
+    ``lsh_band_keys``): ONE bucket-keyed groupBy yields the size cap and
+    the member list, and pairs explode MAP-SIDE from the list (nested
+    explode of the same row — bounded by max_bucket² per bucket). Buckets
+    of more than ``max_bucket`` members (boilerplate floods) emit no pairs.
+    Only the final cross-band pair dedup shuffles. Member lists come from
+    the skew-bounded salted aggregation (``capped_member_lists``), so a
+    flooded bucket never holds its full membership in one merge buffer."""
     sized = capped_member_lists(
         keys, ["band", "bkey"], "id", cap=max_bucket, min_n=2
     )
@@ -296,35 +299,6 @@ def _pairs_from_keys(keys: DataFrame, max_bucket: int) -> DataFrame:
         .select("a", "b")
         .distinct()
     )
-
-
-def lsh_candidate_pairs(
-    signatures: DataFrame, bands: int = 4, rows_per_band: int = 4, max_bucket: int = 50
-) -> DataFrame:
-    """Band the signature, bucket-join, emit candidate (a, b) pairs (a < b).
-
-    ``max_bucket`` caps pathological buckets (boilerplate floods) — a capped
-    bucket is skipped, bounding the pair blow-up at scale; capping is logged
-    by callers via the returned ``skipped`` marker when needed.
-
-    Prefer ``lsh_band_keys`` + ``lsh_candidate_pairs_from_keys`` when you
-    have the documents frame: it computes keys map-side and skips this
-    path's groupBy(id, band) shuffle."""
-    banded = signatures.withColumn("band", (F.col("hidx") / rows_per_band).cast("int"))
-    keys = banded.groupBy("id", "band").agg(
-        md5s(F.concat_ws("|", F.sort_array(F.collect_list(F.concat(
-            F.col("hidx").cast("string"), F.lit(":"),
-            F.col("minh").cast("string")
-        ))))).alias("bkey")
-    )
-    return _pairs_from_keys(keys, max_bucket)
-
-
-def lsh_candidate_pairs_from_keys(
-    keys: DataFrame, max_bucket: int = 50
-) -> DataFrame:
-    """Candidate pairs from map-side band keys (see ``lsh_band_keys``)."""
-    return _pairs_from_keys(keys, max_bucket)
 
 
 def jaccard_pairs(
@@ -372,16 +346,15 @@ def jaccard_pairs(
 def duplicate_clusters(
     pairs: DataFrame,
     iters: int | None = None,
-    max_iters: int = 32,
     stats: dict | None = None,
 ) -> DataFrame:
     """Connected components over a candidate-pair graph → (id, keep_id):
     every member of a duplicate cluster mapped to the cluster's SHORTLEX-
     minimum id (shortest stringified id first, ties broken lexicographically)
     as the canonical survivor — the step that turns near-dup PAIRS
-    (lsh_candidate_pairs / embedding_near_duplicates) into actionable
-    dedup clusters. Ids are strings or ints; ints (and digit strings with
-    no leading zeros) order NUMERICALLY under shortlex, matching
+    (lsh_candidate_pairs_from_keys / embedding_near_duplicates) into
+    actionable dedup clusters. Ids are strings or ints; ints (and digit
+    strings with no leading zeros) order NUMERICALLY under shortlex, matching
     ``exact_duplicates``' numeric min. For non-numeric string ids of
     unequal length the survivor is the SHORTEST id, not the lexicographic
     minimum (``'z'`` beats ``'abc'``). Singletons never appear.
@@ -393,16 +366,16 @@ def duplicate_clusters(
     the edge-list join is the expensive shuffle, the jumps touch only the
     n-row label table, so deep rounds compress 2^4 levels and long chains
     converge in ~¼ the edge-join rounds while shallow graphs stop after
-    round 1-2 without paying for unused jumps. localCheckpoint per jump
-    keeps the plan linear.
+    round 1-2 without paying for unused jumps. Rounds and jumps run on
+    ``fixpoint.iterate``, checkpointed per jump so the plan stays linear.
 
     ``iters`` fixes the round count (engine-reproducible mid-state, what
     the unrolled SQL oracle mirrors); default runs to CONVERGENCE (label
-    set stable), bounded by ``max_iters`` — a chain of 2^32 diameter is not
-    a realistic dup cluster, and hitting the bound raises rather than
-    returning a silently-unconverged labeling. ``stats``, when given a
-    dict, receives ``{"rounds": n}`` — observability for the O(log n)
-    claim (tests assert the bound on adversarial long-chain graphs)."""
+    set stable), bounded by ``fixpoint.MAX_ROUNDS`` — hitting the bound
+    raises ``fixpoint.PathDepthError`` rather than returning a silently-
+    unconverged labeling. ``stats``, when given a dict, receives
+    ``{"rounds": n}`` — observability for the O(log n) claim (tests assert
+    the bound on adversarial long-chain graphs)."""
     e = pairs.select(F.col("a").cast("string"), F.col("b").cast("string"))
     # materialize the undirected edge list ONCE: every propagation round
     # joins it, and without this the whole upstream candidate-pair pipeline
@@ -413,37 +386,33 @@ def duplicate_clusters(
     # of reshuffled per round (guide §2.4: share one exchange), and the
     # union's doubled partition count collapses to the configured shuffle
     # parallelism (half the per-round scan tasks at bench scale).
-    und = (
+    und = fixpoint.checkpoint(
         e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
         .repartition("b")
-        .localCheckpoint()
     )
     # shortlex ordering agrees with numeric order for digit strings — the
     # same survivor rule as exact_duplicates' numeric min for integer ids
     sl = lambda c: F.struct(F.length(c).alias("n"), c.alias("s"))
 
-    labels = (
-        und.select(F.col("a").alias("id"), F.col("b").alias("nb"))
-        .groupBy("id")
-        .agg(F.min(sl(F.col("nb"))).alias("m"))
-        .select(
-            "id",
-            F.when(sl(F.col("m.s")) < sl(F.col("id")), F.col("m.s"))
-            .otherwise(F.col("id"))
-            .alias("lbl"),
+    def smaller(cand: str, cur: str) -> Column:
+        return (
+            F.when(F.col(cand).isNotNull() & (sl(F.col(cand)) < sl(F.col(cur))),
+                   F.col(cand))
+            .otherwise(F.col(cur))
+            .alias("lbl")
         )
-    )
-    rounds = 0
-    prev_ck = None
-    while True:
-        rounds += 1
-        if iters is None and rounds > max_iters:
-            und.unpersist()
-            if prev_ck is not None:
-                prev_ck.unpersist()
-            raise ValueError(
-                f"duplicate_clusters did not converge in {max_iters} rounds"
-            )
+
+    def jump(labels: DataFrame) -> DataFrame:
+        # pointer jumping: lbl := label(lbl) — halves chain depth per jump
+        return labels.join(
+            labels.select(F.col("id").alias("lbl"), F.col("lbl").alias("ll")),
+            "lbl",
+            "left",
+        ).select("id", "prev", smaller("ll", "lbl"))
+
+    jumps: list[int] = []  # jumps per round so far
+
+    def propagate(labels: DataFrame) -> DataFrame:
         # neighborhood min: smallest label among self and neighbors
         nb_min = (
             und.select(F.col("a").alias("id"), F.col("b").alias("nb"))
@@ -455,23 +424,13 @@ def duplicate_clusters(
             .agg(F.min(sl(F.col("nl"))).alias("m"))
             .select("id", F.col("m.s").alias("nl"))
         )
-        stepped = (
-            labels.join(nb_min, "id", "left")
-            .select(
-                "id",
-                # the round's starting label rides along as `prev` so the
-                # convergence probe below is a filter over the ALREADY
-                # MATERIALIZED checkpoint blocks — not an extra join job
-                # against the previous round per iteration
-                F.col("lbl").alias("prev"),
-                F.when(
-                    F.col("nl").isNotNull()
-                    & (sl(F.col("nl")) < sl(F.col("lbl"))),
-                    F.col("nl"),
-                ).otherwise(F.col("lbl")).alias("lbl"),
-            )
+        # the round's starting label rides along as `prev` so the
+        # convergence probe is a filter over the ALREADY MATERIALIZED
+        # checkpoint blocks — not an extra join job against the previous
+        # round per iteration
+        stepped = labels.join(nb_min, "id", "left").select(
+            "id", F.col("lbl").alias("prev"), smaller("nl", "lbl")
         )
-        # pointer jumping: lbl := label(lbl) — halves chain depth per jump.
         # ESCALATING jumps per round (1, 2, then 4): each jump is a
         # self-join of the (n-row) label table only — far cheaper than the
         # neighborhood-min step, which joins the (2m-row) edge list — so
@@ -481,56 +440,25 @@ def duplicate_clusters(
         # after round 1-2 without paying for jumps they never needed.
         # The converged fixpoint is unchanged: labels only decrease, stay
         # within the component, and the convergence probe still requires a
-        # full round (neighborhood + jumps) to be a no-op. Each jump
-        # localCheckpoints so the plan stays linear (a chained self-join
-        # re-executes its subtree — measured slower than the extra job).
-        n_jumps = min(2 ** (rounds - 1), 4)
-        jumped = stepped
-        mid_cks = []
-        for j in range(n_jumps):
-            jumped = (
-                jumped.join(
-                    jumped.select(
-                        F.col("id").alias("lbl"), F.col("lbl").alias("ll")
-                    ),
-                    "lbl",
-                    "left",
-                )
-                .select(
-                    "id",
-                    "prev",
-                    F.when(
-                        F.col("ll").isNotNull()
-                        & (sl(F.col("ll")) < sl(F.col("lbl"))),
-                        F.col("ll"),
-                    ).otherwise(F.col("lbl")).alias("lbl"),
-                )
-            )
-            jumped = jumped.localCheckpoint()
-            if j < n_jumps - 1:
-                mid_cks.append(jumped)
-        new_ck = jumped
-        for ck in mid_cks:
-            ck.unpersist()
-        changed = (
-            iters is None
-            and new_ck.filter(F.col("lbl") != F.col("prev")).limit(1).count()
-            > 0
-        )
-        if prev_ck is not None:
-            prev_ck.unpersist()
-        prev_ck = new_ck
-        labels = new_ck.select(
-            F.col("id").alias("id"), F.col("lbl").alias("lbl")
-        )
-        if iters is not None:
-            if rounds >= iters:
-                break
-        elif not changed:
-            break
-    und.unpersist()
+        # full round (neighborhood + jumps) to be a no-op. Every jump is
+        # checkpointed — all but the last by the inner iterate, the last by
+        # the round itself (a chained self-join re-executes its subtree —
+        # measured slower than the extra job).
+        jumps.append(min(2 ** len(jumps), 4))
+        return jump(fixpoint.iterate(jump, stepped, rounds=jumps[-1] - 1))
+
+    labels = (
+        und.select(F.col("a").alias("id"), F.col("b").alias("nb"))
+        .groupBy("id")
+        .agg(F.min(sl(F.col("nb"))).alias("m"))
+        .select("id", F.col("m.s").alias("nl"))
+        .select("id", smaller("nl", "id"))
+    )
+    labels = fixpoint.iterate(
+        propagate, labels, rounds=iters, changed=F.col("lbl") != F.col("prev")
+    )
     if stats is not None:
-        stats["rounds"] = rounds
+        stats["rounds"] = len(jumps)
     return labels.select("id", F.col("lbl").alias("keep_id"))
 
 

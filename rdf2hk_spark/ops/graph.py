@@ -21,12 +21,15 @@ engine-exact verifiability, the ivf_train playbook:
 Scale shape: per iteration ONE join (edges ⋈ ranks, both keyed by src —
 co-partitioned after the first shuffle) and ONE groupBy(dst) with map-side
 partial sums; the edges×outdegree frame is computed once and persisted.
-localCheckpoint per iteration keeps the plan linear in depth.
+The iterations run on ``fixpoint.iterate``, whose per-round checkpoint
+keeps the plan linear in depth.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+
+from rdf2hk_spark import fixpoint
 
 
 def pagerank(
@@ -47,19 +50,17 @@ def pagerank(
     ).distinct()
     outdeg = e.groupBy("src").agg(F.count("*").alias("od"))
     ed = e.join(outdeg, "src").persist()
-    nodes = (
+    nodes = fixpoint.checkpoint(
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
         .distinct()
-        .localCheckpoint()
     )
-    ranks = nodes.select("node", F.lit(scale).cast("long").alias("r"))
     # snap to the exact decimal: (1-0.85)*10000 evaluates to
     # 1500.0000000000002 in binary, which would bias every node by +2e-13
     # against an oracle writing the literal 1500
     base = round((1.0 - damping) * scale * 1e9) / 1e9
-    prev = None
-    for _ in range(iters):
+
+    def power_step(ranks: DataFrame) -> DataFrame:
         contrib = (
             ed.join(ranks.select(F.col("node").alias("src"), "r"), "src")
             .select(
@@ -69,19 +70,17 @@ def pagerank(
             .groupBy("node")
             .agg(F.sum("c").alias("c"))
         )
-        new_ranks = nodes.join(contrib, "node", "left").select(
+        return nodes.join(contrib, "node", "left").select(
             "node",
             F.round(base + damping * F.coalesce(F.col("c"), F.lit(0.0)))
             .cast("long")
             .alias("r"),
-        ).localCheckpoint()
-        if prev is not None:
-            prev.unpersist()
-        prev = new_ranks
-        # fresh attribute ids: localCheckpoint preserves exprIds and the
-        # next iteration joins this frame against nodes/ed again
-        ranks = new_ranks.select(
-            F.col("node").alias("node"), F.col("r").alias("r")
         )
+
+    ranks = fixpoint.iterate(
+        power_step,
+        nodes.select("node", F.lit(scale).cast("long").alias("r")),
+        rounds=iters,
+    )
     ed.unpersist()
     return ranks.select("node", F.col("r").alias("rank_e4"))

@@ -331,8 +331,9 @@ def embedding_near_duplicates(
     the O(n²) degenerate-bucket bound holds per table.
 
     ``max_bucket`` bounds the within-bucket pair blow-up exactly like
-    dedup.lsh_candidate_pairs — at 10^12 scale a degenerate bucket (zero
-    vectors, boilerplate embeddings) would otherwise emit O(n²) pairs."""
+    dedup.lsh_candidate_pairs_from_keys — at 10^12 scale a degenerate
+    bucket (zero vectors, boilerplate embeddings) would otherwise emit
+    O(n²) pairs."""
     if dim is None:
         dim = _infer_dim(embeddings, vec_col)
     e_ids = embeddings.select(

@@ -26,7 +26,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from rdf2hk_spark import constants as C
+from rdf2hk_spark import constants as C, fixpoint
 
 # skeleton projection for the "lazy" fetches (sparqlfactory.js:110-131):
 # the isa/usesConnector skeleton only
@@ -128,40 +128,24 @@ def filter_entities(entities: DataFrame, filters) -> DataFrame:
 def context_closure(entities: DataFrame, root: str) -> DataFrame:
     """Q4 (sparqlfactory.js:759-812): ``hasParent*`` transitive closure from
     ``root`` downward. Contexts are tiny relative to the graph, so the
-    fixpoint loop joins a cached, broadcast edges frame — each iteration is
-    one broadcast join, depth ≤ context-tree height."""
+    fixpoint joins a cached, broadcast edges frame — each round is one
+    broadcast join, depth ≤ context-tree height; a tree deeper than
+    ``fixpoint.MAX_ROUNDS`` raises ``fixpoint.PathDepthError``."""
     edges = (
         entities.filter(F.col("type").isin(C.CONTEXT, C.VIRTUAL_CONTEXT))
         .select("id", "parent")
         .cache()
     )
-    frontier = edges.sparkSession.createDataFrame([(root,)], "id string")
-    seen = frontier
-    parts = [frontier]  # per-depth checkpointed frontiers
-    for _ in range(64):  # hard depth bound
-        nxt = (
-            edges.join(
-                frontier.select(F.col("id").alias("parent")), "parent"
-            )
-            .select("id")
-            .join(seen, "id", "left_anti")
-        )
-        # checkpoint ONCE per level and probe the cached blocks (before,
-        # isEmpty() executed the step plan and the seen∪nxt checkpoint
-        # re-executed it); ``seen`` stays a lazy union over the per-level
-        # checkpointed frontiers instead of a re-materialized union.
-        nxt_ck = nxt.localCheckpoint()
-        if nxt_ck.isEmpty():
-            nxt_ck.unpersist()
-            break
-        parts.append(nxt_ck)
-        acc = parts[0]
-        for p in parts[1:]:
-            acc = acc.unionByName(p)
-        seen = acc.select(F.col("id").alias("id"))
-        frontier = nxt_ck.select(F.col("id").alias("id"))
+    start = edges.sparkSession.createDataFrame([(root,)], "id string")
+    members = fixpoint.closure(
+        lambda frontier: edges.join(
+            frontier.select(F.col("id").alias("parent")), "parent"
+        ).select("id"),
+        start,
+        start,
+    )
     edges.unpersist()
-    return seen
+    return members
 
 
 def get_context_hierarchy(entities: DataFrame, context_id: str) -> DataFrame:
@@ -220,9 +204,9 @@ def from_uris(
 
     The frontier is a DataFrame throughout (semi-join expansion, no
     ``collect``), so level>1 recursion never funnels ids through the driver —
-    each hop is semi-joins over the links partition. For level>1 each hop's
-    frontier is ``localCheckpoint``-ed (eager): without it the self-
-    referencing plan tree grows ~3^level; with it the plan stays linear."""
+    each hop is semi-joins over the links partition, one
+    ``fixpoint.closure`` round (checkpointed, so the self-referencing plan
+    tree stays linear in ``level`` instead of growing ~3^level)."""
     base = entities.filter(F.col("id").isin(ids))
     if class_name is not None:
         base = base.filter(F.col("className") == class_name)
@@ -230,10 +214,9 @@ def from_uris(
         return base
 
     links = entities.filter(F.col("type") == C.LINK)
-    seen = base.select("id").distinct()
-    frontier = seen
-    conn_acc: DataFrame | None = None
-    for _ in range(level):
+
+    def hop(frontier: DataFrame) -> DataFrame:
+        frontier = frontier.filter(~F.col("conn")).select("id")
         # links touching the frontier: by own id, connector, or bound comp
         by_id = links.join(frontier, "id", "left_semi").select("id")
         by_conn = links.join(
@@ -255,24 +238,20 @@ def from_uris(
             .select(F.col("b.comp").alias("id"))
             .distinct()
         )
-        # connectors land in the RESULT but never seed the next hop —
+        # connectors land in the RESULT but never seed the next hop
+        # (conn=True rows are filtered out of the frontier above) —
         # expanding through a shared predicate would pull every link using
         # it, which is not a neighborhood (describe never expands predicates)
         connectors = tlinks.select(F.col("connector").alias("id")).distinct()
-        conn_acc = connectors if conn_acc is None else conn_acc.unionByName(connectors)
-        fresh = (
+        return (
             touched.unionByName(comps).distinct()
-            .join(seen, "id", "left_anti")
+            .withColumn("conn", F.lit(False))
+            .unionByName(connectors.withColumn("conn", F.lit(True)))
         )
-        if level > 1:
-            # re-alias after the checkpoint: localCheckpoint keeps the
-            # original exprIds, which would collide with links' own `id`
-            # in the next hop's join (Conflicting attributes error)
-            fresh = fresh.localCheckpoint().select(F.col("id").alias("id"))
-        seen = seen.unionByName(fresh)
-        frontier = fresh
-    result_ids = seen.unionByName(conn_acc).distinct()
-    return entities.join(result_ids, "id", "left_semi")
+
+    seeds = base.select("id").distinct().withColumn("conn", F.lit(False))
+    reached = fixpoint.closure(hop, seeds, seeds, rounds=level)
+    return entities.join(reached.select("id"), "id", "left_semi")
 
 
 def get_rdf(quads: DataFrame, s=None, p=None, o=None, g=None,

@@ -35,12 +35,12 @@ algebra and compiles to a DataFrame plan:
   generated forms (``hasParent*`` at sparqlfactory.js:800,
   ``REFERENCES_URI?`` in the delete templates at :718-744) take the
   BFS-from-ground fast path; compound expressions evaluate to pair
-  relations (union / relational composition / reversal) with the same
-  frontier/semi-naive fixpoint machinery as plans.query.context_closure —
-  bounded loops of joins with localCheckpoint lineage truncation, never a
-  driver-side walk. Zero-length components stay SYMBOLIC through sequence
-  composition (A∘(C ∪ id) = A∘C ∪ A) instead of materializing a
-  universal diagonal;
+  relations (union / relational composition / reversal). Both run on the
+  semi-naive ``rdf2hk_spark.fixpoint.closure`` that plans.query's
+  context_closure uses — at most ``fixpoint.MAX_ROUNDS`` rounds of joins
+  (a deeper graph raises ``PathDepthError``), never a driver-side walk.
+  Zero-length components stay SYMBOLIC through sequence composition
+  (A∘(C ∪ id) = A∘C ∪ A) instead of materializing a universal diagonal;
 - aggregates ``COUNT([DISTINCT] ?v | *)`` / ``SUM`` / ``MIN`` / ``MAX`` /
   ``AVG`` / ``GROUP_CONCAT(?v; SEPARATOR "...")`` / ``SAMPLE`` with
   ``GROUP BY`` compile to groupBy().agg() (map-side partial aggregation
@@ -108,22 +108,15 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from rdf2hk_spark import fixpoint
 from rdf2hk_spark.constants import HK_NULL_URI as _HK_NULL_URI
+from rdf2hk_spark.fixpoint import PathDepthError  # noqa: F401 (re-export)
 from rdf2hk_spark.functions import terms as T
 from rdf2hk_spark.plans.query import filter_hk
 
 
 class SparqlSyntaxError(ValueError):
     pass
-
-
-class PathDepthError(RuntimeError):
-    """A property-path fixpoint exceeded ``PATH_MAX_ITERS`` rounds: the
-    query is LEGAL but the graph's diameter along the path is deeper than
-    the configured bound. Typed (not a bare ValueError, not a syntax
-    error) so callers can distinguish a depth-bound abort — raise
-    ``PATH_MAX_ITERS`` and retry — from a parse failure or an internal
-    fault."""
 
 
 # --------------------------------------------------------------------------
@@ -1527,27 +1520,17 @@ def _scan(
 # --------------------------------------------------------------------------
 # property paths: <p>* / <p>+ / <p>? compiled to bounded fixpoint joins
 # (the reference's generated hasParent* / REFERENCES_URI? forms,
-# sparqlfactory.js:718-744,800 — same machinery as plans.query's Q4 closure)
+# sparqlfactory.js:718-744,800 — the same rdf2hk_spark.fixpoint loop as
+# plans.query's Q4 closure). Path depth is bounded by fixpoint.MAX_ROUNDS:
+# a legal query never turns into an UNTYPED failure — a deeper graph
+# raises PathDepthError.
 # --------------------------------------------------------------------------
-
-# Depth bound on path fixpoints — module-level and mutable so a caller with
-# legitimately deeper-than-64-hop data can raise it (a legal query never
-# turns into an UNTYPED failure: exceeding it raises PathDepthError).
-PATH_MAX_ITERS = 64
-
-
-def _realias(df: DataFrame, *cols: str) -> DataFrame:
-    """Fresh attribute ids: localCheckpoint PRESERVES exprIds, so a frame
-    checkpointed from ``edges`` would conflict with ``edges`` itself in a
-    later join ('Conflicting attributes') without this."""
-    return df.select(*[F.col(c).alias(c) for c in cols])
-
 
 def _reachable(edges: DataFrame, start: str, forward: bool) -> DataFrame:
     """Nodes reachable from ``start`` in ≥1 step along (src, dst) edges
     (reversed when ``forward`` is False): frontier BFS, one broadcast-sized
-    join + anti-join per hop, localCheckpoint truncating lineage so the plan
-    stays linear in depth. Depth ≤ eccentricity, hard-bounded. → (n)."""
+    join + anti-join per hop. Depth ≤ eccentricity, bounded by
+    ``fixpoint.MAX_ROUNDS``. → (n)."""
     spark = edges.sparkSession
     return _reachable_from(
         edges, spark.createDataFrame([(start,)], "n string"), forward
@@ -1565,74 +1548,28 @@ def _reachable_from(
     ``GRAPH ?var`` seed one BFS across all graphs at once instead of
     materializing the full per-graph closure."""
     a, b = ("src", "dst") if forward else ("dst", "src")
-    reached = seeds.limit(0)
-    frontier = seeds
-    parts: list[DataFrame] = []  # per-round checkpointed deltas
-    for _ in range(PATH_MAX_ITERS):
-        new = (
-            edges.join(frontier.select(F.col("n").alias(a)), a)
-            .select(F.col(b).alias("n"))
-            .distinct()
-            .join(reached, "n", "left_anti")
-        )
-        # checkpoint BEFORE the emptiness probe (isEmpty then reads the
-        # cached blocks), and accumulate the result as a lazy union OVER
-        # the per-round checkpointed deltas — re-materializing reached∪delta
-        # each round was a job that copied every reached row per hop
-        # (O(n·depth) block writes over the loop; the lazy union scans the
-        # same cached blocks without rewriting them).
-        new_ck = new.localCheckpoint()
-        if new_ck.isEmpty():
-            new_ck.unpersist()
-            return reached
-        parts.append(new_ck)
-        acc = parts[0]
-        for p in parts[1:]:
-            acc = acc.unionByName(p)
-        reached = _realias(acc, "n")
-        frontier = _realias(new_ck, "n")
-    raise PathDepthError(
-        f"property-path closure did not converge within PATH_MAX_ITERS="
-        f"{PATH_MAX_ITERS} hops — raise rdf2hk_spark.plans.sparql."
-        "PATH_MAX_ITERS for deeper graphs"
+    return fixpoint.closure(
+        lambda frontier: edges.join(frontier.select(F.col("n").alias(a)), a)
+        .select(F.col(b).alias("n"))
+        .distinct(),
+        seeds,
+        seeds.limit(0),
     )
 
 
 def _closure_pairs(edges: DataFrame) -> DataFrame:
     """All (src, dst) pairs connected by ≥1 step: semi-naive transitive
-    closure — each iteration extends only the LAST round's new pairs by one
-    edge (delta join), so iteration k discovers exactly the distance-(k+1)
-    pairs; localCheckpoint per round keeps the plan linear. ``edges`` is
-    already checkpointed by the caller — no re-materialization here."""
-    parts: list[DataFrame] = [_realias(edges, "src", "dst")]
-    paths = parts[0]
-    delta = paths
-    for _ in range(PATH_MAX_ITERS):
-        step = (
-            delta.select("src", F.col("dst").alias("_mid"))
-            .join(edges.select(F.col("src").alias("_mid"), "dst"), "_mid")
-            .select("src", "dst")
-            .distinct()
-            .join(paths, ["src", "dst"], "left_anti")
-        )
-        # checkpoint before probing, accumulate lazily (see
-        # _reachable_from): the pair set is a lazy union over the
-        # per-round deltas instead of a re-materialized paths∪delta
-        # checkpoint per round.
-        step_ck = step.localCheckpoint()
-        if step_ck.isEmpty():
-            step_ck.unpersist()
-            return paths
-        parts.append(step_ck)
-        acc = parts[0]
-        for p in parts[1:]:
-            acc = acc.unionByName(p)
-        paths = _realias(acc, "src", "dst")
-        delta = _realias(step_ck, "src", "dst")
-    raise PathDepthError(
-        f"property-path closure did not converge within PATH_MAX_ITERS="
-        f"{PATH_MAX_ITERS} hops — raise rdf2hk_spark.plans.sparql."
-        "PATH_MAX_ITERS for deeper graphs"
+    closure — each round extends only the LAST round's new pairs by one
+    edge (delta join), so round k discovers exactly the distance-(k+1)
+    pairs. ``edges`` is already checkpointed by the caller — no
+    re-materialization here."""
+    return fixpoint.closure(
+        lambda delta: delta.select("src", F.col("dst").alias("_mid"))
+        .join(edges.select(F.col("src").alias("_mid"), "dst"), "_mid")
+        .select("src", "dst")
+        .distinct(),
+        edges,
+        edges,
     )
 
 
@@ -1640,12 +1577,10 @@ def _scan_path(quads: DataFrame, pat: Pattern) -> DataFrame:
     """Compile a simple modified-predicate pattern (``<p>*``/``+``/``?``)
     to a bindings frame — the single-step relation is one predicate scan,
     then ``_path_with_edges`` picks the evaluation strategy."""
-    edges = _realias(
+    edges = fixpoint.checkpoint(
         quads.filter(F.col("p") == pat.p)
         .select(F.col("s").alias("src"), F.col("o").alias("dst"))
         .distinct()
-        .localCheckpoint(),
-        "src", "dst",
     )
     return _path_with_edges(quads, pat, edges, pat.path)
 
@@ -1677,15 +1612,13 @@ def _scan_path_g(
     def comp(g: Column, n: Column) -> Column:
         return F.struct(g.alias("g"), n.alias("n"))
 
-    edges = _realias(
+    edges = fixpoint.checkpoint(
         quads.filter(F.col("p") == pat.p)
         .select(
             comp(F.col("g"), F.col("s")).alias("src"),
             comp(F.col("g"), F.col("o")).alias("dst"),
         )
         .distinct()
-        .localCheckpoint(),
-        "src", "dst",
     )
     if op != "?" and (s_var is None or o_var is None):
         # ground endpoint: seeded directional BFS over composite keys —
@@ -1954,9 +1887,7 @@ def _path_pairs(quads: DataFrame, node) -> tuple[DataFrame, bool]:
         pairs, zero = _path_pairs(quads, node.inner)
         if node.op == "?":
             return pairs.distinct(), True  # ZeroOrOnePath is ALP: a set
-        closed = _closure_pairs(
-            _realias(pairs.distinct().localCheckpoint(), "src", "dst")
-        )
+        closed = _closure_pairs(fixpoint.checkpoint(pairs.distinct()))
         # (P ∪ id)* = P* ; (P ∪ id)+ = P ∪ P² ∪ ... ∪ id-from-inner
         return closed, True if node.op == "*" else zero
     raise AssertionError(node)  # pragma: no cover
@@ -2029,9 +1960,7 @@ def _scan_path_expr(quads: DataFrame, pat: Pattern) -> DataFrame:
         and (s_ground or o_ground)
     ):
         inner_pairs, inner_zero = _path_pairs(quads, node.inner)
-        edges = _realias(
-            inner_pairs.distinct().localCheckpoint(), "src", "dst"
-        )
+        edges = fixpoint.checkpoint(inner_pairs.distinct())
         # (P ∪ id)+ = P*: an inner zero component upgrades + to *
         op = "*" if (node.op == "*" or inner_zero) else "+"
         return _path_with_edges(quads, pat, edges, op)

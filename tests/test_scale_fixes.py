@@ -346,7 +346,7 @@ def test_duplicate_clusters_10k_chain_round_bound(spark):
     """Adversarial worst case for the O(log n) pointer-jumping claim: a
     10k-node PATH graph (diameter 10k). Convergence must land within
     ~log2(n)+2 rounds — a linear-propagation implementation would need
-    ~10k rounds and trip max_iters instead."""
+    ~10k rounds and hit fixpoint.MAX_ROUNDS instead."""
     import math
 
     n = 10_000

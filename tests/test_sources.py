@@ -1,5 +1,7 @@
 """N-Quads source/sink round trip + the driver-side Turtle fixture reader."""
 
+from pathlib import Path
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -9,6 +11,7 @@ from rdf2hk_spark.operators.parse import ParseOptions, parse_quads
 from rdf2hk_spark.sources import nquads
 
 QUAD_SCHEMA = "stmt_idx long, s string, p string, o string, g string"
+DATA = Path(__file__).parent / "data"
 
 
 def test_nquads_write_read_roundtrip(spark, tmp_path):
@@ -46,9 +49,10 @@ def test_nquads_reader_handles_triples_and_garbage(spark, tmp_path):
 
 
 def test_driver_turtle_reader_matches_fixture(spark):
-    """The tiny Turtle reader reproduces the hand-encoded fixture from the
-    reference's actual .ttl text."""
-    ttl = open("/root/reference/test/data/people_from_jf.ttl").read()
+    """The tiny Turtle reader reproduces the hand-encoded fixture from its
+    Turtle text (prefixed names, ``;`` predicate lists, ``@lang``
+    literals)."""
+    ttl = (DATA / "people_from_jf.ttl").read_text(encoding="utf-8")
     rows = nquads.parse_turtle_driver(ttl)
     got = {(s, p, o) for _, s, p, o, _ in rows}
     want = {(s, p, o) for _, s, p, o, _ in FX.quads()}

@@ -1236,6 +1236,7 @@ class TestExistsMinusBind:
         assert len(got) == 4 + 5
 
     def test_path_depth_error_is_typed(self, spark):
+        from rdf2hk_spark import fixpoint
         from rdf2hk_spark.plans import sparql as S
 
         chain = spark.createDataFrame(
@@ -1243,8 +1244,8 @@ class TestExistsMinusBind:
               "<http://g>") for i in range(12)],
             QUAD_SCHEMA,
         )
-        old = S.PATH_MAX_ITERS
-        S.PATH_MAX_ITERS = 3
+        old = fixpoint.MAX_ROUNDS
+        fixpoint.MAX_ROUNDS = 3
         try:
             with pytest.raises(S.PathDepthError):
                 run_sparql(
@@ -1252,7 +1253,7 @@ class TestExistsMinusBind:
                     "SELECT ?x WHERE { <http://n/0> <http://p/next>+ ?x }",
                 ).collect()
         finally:
-            S.PATH_MAX_ITERS = old
+            fixpoint.MAX_ROUNDS = old
         # and with the default bound the same query answers fine
         out = run_sparql(
             chain, "SELECT ?x WHERE { <http://n/0> <http://p/next>+ ?x }"
