@@ -859,7 +859,7 @@ def _ctx_quads_multig(spark, sf_dir):
 
 def q_kg_sparql_graph_path(spark, sf_dir):
     """Simple property path UNDER ``GRAPH ?var``: per-graph ``+`` closure
-    via composite (g, node) keys (plans.sparql._scan_path_g) — every
+    via composite (g, node) keys (plans.sparql._scan_path) — every
     context reaching <ctx/root> inside its own region graph, with the
     graph bound. The closure must not leak across graphs even though all
     regions share the one <ctx/root> sink."""

@@ -19,6 +19,8 @@ removal):
 from __future__ import annotations
 
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, functions as F, types as Ty
 from pyspark.sql.functions import pandas_udf
 
@@ -62,9 +64,6 @@ def _extract_arrow(html: pd.Series):
     semantics ("drop each script/style block") never produces. Raises on
     invalid UTF-8 (the caller falls back to the pandas chain, which
     decodes with errors="replace")."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
     arr = pa.Array.from_pandas(html)
     if pa.types.is_binary(arr.type) or pa.types.is_large_binary(arr.type):
         arr = arr.cast(pa.string())  # ArrowInvalid on bad utf8 → fallback
@@ -91,10 +90,10 @@ def _extract_arrow(html: pd.Series):
 def extract_text_udf(html: pd.Series) -> pd.Series:
     try:
         return _extract_arrow(html)
-    except Exception:
-        # invalid UTF-8 (or a missing pyarrow kernel): the pandas chain
-        # decodes with errors="replace" — per-row output is independent of
-        # batch composition either way, so determinism is preserved
+    except (pa.ArrowInvalid, pa.ArrowNotImplementedError):
+        # invalid UTF-8 (ArrowInvalid) or a missing pyarrow kernel: the
+        # pandas chain decodes with errors="replace"; any other error is a
+        # fault and propagates
         return _extract_series(html)
 
 

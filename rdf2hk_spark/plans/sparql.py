@@ -18,8 +18,11 @@ algebra and compiles to a DataFrame plan:
   storage (Q11, sparqlhelper.js:296-327); ``GRAPH <g> { ... }`` scopes the
   inner group's scans the same way, and ``GRAPH ?g { ... }`` binds the
   graph column as an ordinary join variable over NAMED graphs (the
-  null-graph sentinel never binds; property paths under a graph VARIABLE
-  raise — under a ground GRAPH they close over that graph only);
+  null-graph sentinel never binds). Property paths have ONE evaluator for
+  both scopes: the default graph is the one-graph case, and under
+  ``GRAPH ?g`` path endpoints become composite ``struct(g, node)`` keys so
+  no step crosses a graph (under a ground GRAPH the scan is filtered to
+  that graph first);
 - ``hide_hk=True`` applies the FILTER_HK predicate-hiding (P14) to every
   pattern scan — the ``setHKFiltered`` semantic (Q12) achieved in the plan
   instead of by string rewriting;
@@ -31,11 +34,12 @@ algebra and compiles to a DataFrame plan:
   sequences ``p1/p2``, alternatives ``(p1|p2)``, inverse ``^p``, and
   negated property sets ``!p`` / ``!(p1|^p2)`` (forward AND inverse
   members, SPARQL 1.1 §18.2.2.3 split),
-  composable (e.g. ``^<parent>+``, ``(<a>/<b>)*``). The reference's own
-  generated forms (``hasParent*`` at sparqlfactory.js:800,
-  ``REFERENCES_URI?`` in the delete templates at :718-744) take the
-  BFS-from-ground fast path; compound expressions evaluate to pair
-  relations (union / relational composition / reversal). Both run on the
+  composable (e.g. ``^<parent>+``, ``(<a>/<b>)*``). Every expression
+  evaluates to a pair relation (union / relational composition /
+  reversal); a top-level ``*``/``+`` with a ground endpoint — the
+  reference's own ``hasParent*`` at sparqlfactory.js:800 — takes the
+  BFS-from-ground fast path instead (``REFERENCES_URI?`` in the delete
+  templates at :718-744 is a one-step filter). Both run on the
   semi-naive ``rdf2hk_spark.fixpoint.closure`` that plans.query's
   context_closure uses — at most ``fixpoint.MAX_ROUNDS`` rounds of joins
   (a deeper graph raises ``PathDepthError``), never a driver-side walk.
@@ -84,10 +88,9 @@ algebra and compiles to a DataFrame plan:
 Subset contract: SELECT / ASK / DESCRIBE / CONSTRUCT queries over the forms
 above ([NOT] EXISTS composes everywhere a boolean or value can appear:
 FILTER and HAVING boolean expressions, BIND values and SELECT expression
-projections — bare EXISTS materializes an xsd:boolean term; simple
-``<p>*``/``+``/``?`` paths work under GRAPH ?var via composite (g, node)
-closure keys — compound paths too, by re-encoding the quad frame's
-endpoints as composite structs; subqueries under GRAPH ?var evaluate per
+projections — bare EXISTS materializes an xsd:boolean term; every
+property path works under GRAPH ?var through the same evaluator as in the
+default graph; subqueries under GRAPH ?var evaluate per
 graph, with per-graph LIMIT/OFFSET windows). Any OTHER construct outside
 the grammar above raises
 ``SparqlSyntaxError`` — never a silently wrong answer.
@@ -203,9 +206,8 @@ class Pattern:
     s: str
     p: str
     o: str
-    path: str | None = None  # '*' | '+' | '?' path modifier on a ground p
-    # compound path expression (sequence / alternative / inverse, possibly
-    # with per-element modifiers); when set, ``p``/``path`` are unused
+    # property-path expression (modifier / sequence / alternative /
+    # inverse / negated set); when set, ``p`` is unused
     pexpr: "object | None" = None
 
 
@@ -923,15 +925,11 @@ class _Parser:
             return Pattern(s, p, part())
         node = self._path_seq(allow_path)
         o = part()
-        # canonical simple shapes keep their dedicated scan paths: a plain
-        # predicate scans directly; <p>* / <p>+ / <p>? gets the BFS-from-
-        # ground optimizations of _scan_path (a lone '?' only tokenizes as
-        # punct when no variable name follows, so `<p>? ?o` is a path and
-        # `<p> ?o` is a plain object variable)
+        # a plain predicate scans directly; anything else is a path (a lone
+        # '?' only tokenizes as punct when no variable name follows, so
+        # `<p>? ?o` is a path and `<p> ?o` is a plain object variable)
         if isinstance(node, PIri):
             return Pattern(s, node.iri, o)
-        if isinstance(node, PMod) and isinstance(node.inner, PIri):
-            return Pattern(s, node.inner.iri, o, path=node.op)
         return Pattern(s, "", o, pexpr=node)
 
     def _no_path(self, allow_path: bool) -> None:
@@ -1518,23 +1516,32 @@ def _scan(
 
 
 # --------------------------------------------------------------------------
-# property paths: <p>* / <p>+ / <p>? compiled to bounded fixpoint joins
-# (the reference's generated hasParent* / REFERENCES_URI? forms,
-# sparqlfactory.js:718-744,800 — the same rdf2hk_spark.fixpoint loop as
-# plans.query's Q4 closure). Path depth is bounded by fixpoint.MAX_ROUNDS:
-# a legal query never turns into an UNTYPED failure — a deeper graph
-# raises PathDepthError.
+# property paths: one evaluator (_scan_path → _path_pairs →
+# _bind_path_endpoints) for the default graph and GRAPH ?var, compiled to
+# bounded fixpoint joins (the reference's generated hasParent* /
+# REFERENCES_URI? forms, sparqlfactory.js:718-744,800 — the same
+# rdf2hk_spark.fixpoint loop as plans.query's Q4 closure). Path depth is
+# bounded by fixpoint.MAX_ROUNDS: a legal query never turns into an
+# UNTYPED failure — a deeper graph raises PathDepthError.
 # --------------------------------------------------------------------------
 
-def _reachable(edges: DataFrame, start: str, forward: bool) -> DataFrame:
-    """Nodes reachable from ``start`` in ≥1 step along (src, dst) edges
-    (reversed when ``forward`` is False): frontier BFS, one broadcast-sized
-    join + anti-join per hop. Depth ≤ eccentricity, bounded by
-    ``fixpoint.MAX_ROUNDS``. → (n)."""
-    spark = edges.sparkSession
-    return _reachable_from(
-        edges, spark.createDataFrame([(start,)], "n string"), forward
-    )
+def _path_key(g: Column, n: Column, graph_var: str | None) -> Column:
+    """A path endpoint: the plain node in the default graph; under
+    ``GRAPH ?var`` the composite ``struct(g, n)``, so a step relation over
+    these keys never crosses graphs and every closure is per graph."""
+    if graph_var is None:
+        return n
+    return F.struct(g.alias("g"), n.alias("n"))
+
+
+def _path_graphs(quads: DataFrame, graph_var: str | None) -> DataFrame:
+    """The graphs a path evaluates in — the source of zero-length
+    diagonals, ground seeds and the both-ground identity: one zero-column
+    row for the default graph, the distinct named graphs (column ``g``)
+    under ``GRAPH ?var``."""
+    if graph_var is None:
+        return quads.sparkSession.range(1).select()
+    return quads.select("g").distinct()
 
 
 def _reachable_from(
@@ -1546,7 +1553,8 @@ def _reachable_from(
     (steps never cross graphs) per-seed attribution is implicit in the
     struct's ``g`` field, which is what lets a ground endpoint under
     ``GRAPH ?var`` seed one BFS across all graphs at once instead of
-    materializing the full per-graph closure."""
+    materializing the full per-graph closure. Depth ≤ eccentricity,
+    bounded by ``fixpoint.MAX_ROUNDS``."""
     a, b = ("src", "dst") if forward else ("dst", "src")
     return fixpoint.closure(
         lambda frontier: edges.join(frontier.select(F.col("n").alias(a)), a)
@@ -1573,236 +1581,55 @@ def _closure_pairs(edges: DataFrame) -> DataFrame:
     )
 
 
-def _scan_path(quads: DataFrame, pat: Pattern) -> DataFrame:
-    """Compile a simple modified-predicate pattern (``<p>*``/``+``/``?``)
-    to a bindings frame — the single-step relation is one predicate scan,
-    then ``_path_with_edges`` picks the evaluation strategy."""
-    edges = fixpoint.checkpoint(
-        quads.filter(F.col("p") == pat.p)
-        .select(F.col("s").alias("src"), F.col("o").alias("dst"))
-        .distinct()
-    )
-    return _path_with_edges(quads, pat, edges, pat.path)
-
-
-def _scan_path_g(
-    quads: DataFrame, pat: Pattern, graph_var: str
+def _scan_path(
+    quads: DataFrame, pat: Pattern, graph_var: str | None
 ) -> DataFrame:
-    """Per-graph closure for a simple modified-predicate path under
-    ``GRAPH ?var``: nodes become composite ``struct(g, n)`` keys, so the
-    single-step relation never crosses graphs and the ordinary pairwise
-    closure (:func:`_closure_pairs`) IS the per-graph closure — one
-    evaluation for ALL named graphs at once, no per-graph loop, no driver
-    hop. Endpoints (and the graph variable) bind by decomposing the
-    structs. A GROUND endpoint takes the directional fast path: the BFS
-    seeds (g, ground) for every graph where the constant has a step
-    (:func:`_reachable_from` — per-graph attribution rides in the
-    struct's ``g``), so only reachable pairs materialize, never the full
-    per-graph closure.
+    """Compile a path pattern to a bindings frame, in the default graph
+    (``graph_var`` None) or per named graph under ``GRAPH ?var``.
 
-    Zero-length semantics per graph: ``*``/``?`` with two variables match
-    every term OF THAT GRAPH against itself; a ground endpoint admits
-    (g, t, t) for EVERY named graph of the dataset, mirroring the
-    non-graph rule that zero-length never requires presence."""
-    op = pat.path
-    include_zero = op in ("*", "?")
-    s_var = pat.s[1:] if pat.s.startswith("?") else None
-    o_var = pat.o[1:] if pat.o.startswith("?") else None
+    Under a graph variable the quad frame's endpoints are re-encoded as
+    :func:`_path_key` structs BEFORE the pair-relation evaluation —
+    :func:`_path_pairs` touches only (s, p, o) with predicate filters and
+    src/dst joins, so it runs unchanged over composite keys, and one
+    evaluation covers ALL named graphs (no per-graph loop).
 
-    def comp(g: Column, n: Column) -> Column:
-        return F.struct(g.alias("g"), n.alias("n"))
-
-    edges = fixpoint.checkpoint(
-        quads.filter(F.col("p") == pat.p)
-        .select(
-            comp(F.col("g"), F.col("s")).alias("src"),
-            comp(F.col("g"), F.col("o")).alias("dst"),
+    A TOP-LEVEL ``*``/``+`` with a ground endpoint (``<root> ^<parent>+
+    ?d``, ``?c <hasParent>* <r1>``) takes the directional frontier BFS
+    from the constant, seeded in every graph of the scope — never the
+    global closure-then-filter, which would materialize every connected
+    pair to keep one source."""
+    node = pat.pexpr
+    keyed = quads
+    if graph_var is not None:
+        keyed = quads.select(
+            _path_key(F.col("g"), F.col("s"), graph_var).alias("s"),
+            F.col("p"),
+            _path_key(F.col("g"), F.col("o"), graph_var).alias("o"),
         )
-        .distinct()
-    )
-    if op != "?" and (s_var is None or o_var is None):
-        # ground endpoint: seeded directional BFS over composite keys —
-        # seeds are (g, ground) wherever the constant has a step in g;
-        # reattach the ground side so _bind_path_endpoints_g sees the same
-        # (src, dst) pair shape (and applies zero-length rules unchanged)
-        forward = s_var is None
-        ground = pat.s if forward else pat.o
-        end = "src" if forward else "dst"
-        seeds = (
-            edges.filter(F.col(end).getField("n") == ground)
-            .select(F.col(end).alias("n"))
-            .distinct()
-        )
-        reach = _reachable_from(edges, seeds, forward=forward)
-        g_of = F.col("n").getField("g")
-        if forward:
-            pairs = reach.select(
-                comp(g_of, F.lit(ground)).alias("src"), F.col("n").alias("dst")
-            )
-        else:
-            pairs = reach.select(
-                F.col("n").alias("src"), comp(g_of, F.lit(ground)).alias("dst")
-            )
-    else:
-        pairs = edges if op == "?" else _closure_pairs(edges)
-    return _bind_path_endpoints_g(quads, pat, pairs, include_zero, graph_var)
-
-
-def _scan_path_expr_g(
-    quads: DataFrame, pat: Pattern, graph_var: str
-) -> DataFrame:
-    """Compound path (sequence / alternative / inverse / negated set,
-    modifiers anywhere) under ``GRAPH ?var``: re-encode the quad frame's
-    endpoints as composite ``struct(g, n)`` BEFORE the pair-relation
-    evaluation — :func:`_path_pairs` touches only (s, p, o) with predicate
-    string filters and src/dst joins, so it runs UNCHANGED over composite
-    keys and every step relation stays inside its graph. Endpoints and
-    the graph variable then bind by decomposing the structs."""
-    qc = quads.select(
-        F.struct(F.col("g").alias("g"), F.col("s").alias("n")).alias("s"),
-        F.col("p"),
-        F.struct(F.col("g").alias("g"), F.col("o").alias("n")).alias("o"),
-    )
-    pairs, zero = _path_pairs(qc, pat.pexpr)
-    return _bind_path_endpoints_g(quads, pat, pairs, zero, graph_var)
-
-
-def _bind_path_endpoints_g(
-    quads: DataFrame,
-    pat: Pattern,
-    pairs: DataFrame,
-    zero: bool,
-    graph_var: str,
-) -> DataFrame:
-    """Composite twin of :func:`_bind_path_endpoints`: ``pairs`` carries
-    ``struct(g, n)`` endpoints (src.g == dst.g by construction — steps
-    never cross graphs) and the graph VARIABLE binds alongside the
-    endpoints. Zero-length semantics mirror the plain binder per graph;
-    a ground endpoint admits (g, t, t) for EVERY named graph."""
-    spark = quads.sparkSession
-    s_var = pat.s[1:] if pat.s.startswith("?") else None
-    o_var = pat.o[1:] if pat.o.startswith("?") else None
-
-    def comp(g: Column, n: Column) -> Column:
-        return F.struct(g.alias("g"), n.alias("n"))
-
-    if zero:
-        if s_var is not None and o_var is not None:
-            # every term of each graph matches itself within that graph;
-            # folding the identity in deduplicates — set semantics there,
-            # exactly like the plain binder
-            nodes = (
-                quads.select(F.col("g"), F.col("s").alias("n"))
-                .unionByName(quads.select(F.col("g"), F.col("o").alias("n")))
-                .distinct()
-            )
-            diag = nodes.select(
-                comp(F.col("g"), F.col("n")).alias("src"),
-                comp(F.col("g"), F.col("n")).alias("dst"),
-            )
-            pairs = pairs.unionByName(diag).distinct()
-        elif s_var is None and o_var is None:
-            if pat.s == pat.o:
-                # identity holds in every named graph
-                return quads.select("g").distinct().select(
-                    F.col("g").alias(graph_var)
-                )
-        else:
-            # ground endpoint: (g, t, t) for every named graph
-            t = pat.s if s_var is None else pat.o
-            diag = quads.select("g").distinct().select(
-                comp(F.col("g"), F.lit(t)).alias("src"),
-                comp(F.col("g"), F.lit(t)).alias("dst"),
-            )
-            pairs = pairs.unionByName(diag).distinct()
-    # bind endpoints + the graph variable; duplicates filter to equality
-    positions = [(graph_var, F.col("src").getField("g"))]
-    for var, col, ground in (
-        (s_var, F.col("src").getField("n"), pat.s),
-        (o_var, F.col("dst").getField("n"), pat.o),
+    forward = not pat.s.startswith("?")  # ground start ⇒ walk src→dst
+    if not (
+        isinstance(node, PMod)
+        and node.op in ("*", "+")
+        and (forward or not pat.o.startswith("?"))
     ):
-        if var is None:
-            pairs = pairs.filter(col == ground)
-        else:
-            positions.append((var, col))
-    out_cols: dict[str, Column] = {}
-    cond = None
-    for var, col in positions:
-        if var in out_cols:
-            eq = out_cols[var] == col
-            cond = eq if cond is None else (cond & eq)
-        else:
-            out_cols[var] = col
-    if cond is not None:
-        pairs = pairs.filter(cond)
-    return pairs.select(*[c.alias(v) for v, c in out_cols.items()])
-
-
-def _path_with_edges(
-    quads: DataFrame, pat: Pattern, edges: DataFrame, op: str
-) -> DataFrame:
-    """Evaluate a ``*``/``+``/``?`` closure over an arbitrary prepared
-    single-step relation ``edges`` (src, dst — deduplicated, checkpointed)
-    and bind the pattern's endpoints. Ground endpoints pick the cheap
-    DIRECTIONAL reachability (frontier BFS from the constant — never the
-    full closure); two variables compute the pairwise closure. Zero-length
-    semantics per SPARQL 1.1: ``*``/``?`` with a ground endpoint always
-    admit the (t, t) solution; with two variables the zero-length path
-    matches every term of the active graph (subject or object position);
-    a repeated variable (``?x <p>* ?x``) keeps only the diagonal."""
-    spark = quads.sparkSession
-    include_zero = op in ("*", "?")
-    s_var = pat.s[1:] if pat.s.startswith("?") else None
-    o_var = pat.o[1:] if pat.o.startswith("?") else None
-
-    if s_var is None and o_var is None:
-        # both ground: pure existence (zero-column frame, _join's semantics)
-        if include_zero and pat.s == pat.o:
-            return spark.range(1).select()
-        if op == "?":
-            hit = edges.filter(
-                (F.col("src") == pat.s) & (F.col("dst") == pat.o)
-            )
-        else:
-            hit = _reachable(edges, pat.s, forward=True).filter(
-                F.col("n") == pat.o
-            )
-        return hit.select()
-
-    if s_var is None or o_var is None:
-        forward = s_var is None  # ground start ⇒ walk src→dst
-        ground, var = (pat.s, o_var) if forward else (pat.o, s_var)
-        if op == "?":
-            reach = edges.filter(
-                F.col("src" if forward else "dst") == ground
-            ).select(F.col("dst" if forward else "src").alias("n"))
-        else:
-            reach = _reachable(edges, ground, forward=forward)
-        out = reach.select(F.col("n").alias(var))
-        if include_zero:
-            out = out.unionByName(
-                spark.createDataFrame([(ground,)], f"{var} string")
-            ).distinct()
-        return out
-
-    pairs = edges if op == "?" else _closure_pairs(edges)
-    if include_zero:
-        # zero-length path: every term of the active graph matches itself
-        nodes = (
-            quads.select(F.col("s").alias("src"))
-            .unionByName(quads.select(F.col("o").alias("src")))
-            .distinct()
-        )
-        pairs = pairs.unionByName(
-            nodes.select("src", F.col("src").alias("dst"))
-        ).distinct()
-    if s_var == o_var:
-        return pairs.filter(F.col("src") == F.col("dst")).select(
-            F.col("src").alias(s_var)
-        )
-    return pairs.select(
-        F.col("src").alias(s_var), F.col("dst").alias(o_var)
+        pairs, zero = _path_pairs(keyed, node)
+        return _bind_path_endpoints(quads, pat, pairs, zero, graph_var)
+    inner, inner_zero = _path_pairs(keyed, node.inner)
+    # (P ∪ id)+ = P*: an inner zero component upgrades + to *
+    zero = node.op == "*" or inner_zero
+    if zero and pat.s == pat.o:
+        # one constant at both ends: the zero-length identity answers it
+        return _bind_path_endpoints(quads, pat, inner, zero, graph_var)
+    edges = fixpoint.checkpoint(inner.distinct())
+    ground = F.lit(pat.s if forward else pat.o)
+    seeds = _path_graphs(quads, graph_var).select(
+        _path_key(F.col("g"), ground, graph_var).alias("n")
     )
+    reach = _reachable_from(edges, seeds, forward)
+    start = _path_key(F.col("n").getField("g"), ground, graph_var)
+    a, b = ("src", "dst") if forward else ("dst", "src")
+    pairs = reach.select(start.alias(a), F.col("n").alias(b))
+    return _bind_path_endpoints(quads, pat, pairs, zero, graph_var)
 
 
 def _path_pairs(quads: DataFrame, node) -> tuple[DataFrame, bool]:
@@ -1893,79 +1720,80 @@ def _path_pairs(quads: DataFrame, node) -> tuple[DataFrame, bool]:
     raise AssertionError(node)  # pragma: no cover
 
 
+
 def _bind_path_endpoints(
-    quads: DataFrame, pat: Pattern, pairs: DataFrame, zero: bool
+    quads: DataFrame,
+    pat: Pattern,
+    pairs: DataFrame,
+    zero: bool,
+    graph_var: str | None,
 ) -> DataFrame:
-    """Bind a pattern's endpoints against an evaluated pair relation,
-    applying SPARQL zero-length semantics: ground endpoints always admit
-    (t, t); two variables extend the relation with the identity over every
-    graph term; a repeated variable keeps the diagonal. When the zero
-    identity is folded in for a var-var binding, the union deduplicates —
-    so a zero-admitting COMPOUND path (e.g. ``p?/q?``) yields set-semantics
-    solutions there; the plain (no-zero) sequences/alternatives keep their
-    bag multiplicity untouched."""
-    spark = quads.sparkSession
+    """Bind a pattern's endpoints (and, under ``GRAPH ?var``, the graph
+    variable) against an evaluated pair relation of :func:`_path_key`
+    endpoints, applying SPARQL 1.1 zero-length semantics in every graph
+    of :func:`_path_graphs`: a ground endpoint always admits (t, t) — even
+    where t does not occur; two variables extend the relation with the
+    identity over every term of the graph (subject or object position); a
+    repeated variable keeps the diagonal. When the zero identity is folded
+    in, the union deduplicates — so a zero-admitting COMPOUND path (e.g.
+    ``p?/q?``) yields set-semantics solutions there; the plain (no-zero)
+    sequences/alternatives keep their bag multiplicity untouched."""
     s_var = pat.s[1:] if pat.s.startswith("?") else None
     o_var = pat.o[1:] if pat.o.startswith("?") else None
-    if s_var is None and o_var is None:
-        if zero and pat.s == pat.o:
-            return spark.range(1).select()
-        return pairs.filter(
-            (F.col("src") == pat.s) & (F.col("dst") == pat.o)
-        ).select()
-    if s_var is None or o_var is None:
-        forward = s_var is None
-        ground, var = (pat.s, o_var) if forward else (pat.o, s_var)
-        out = pairs.filter(
-            F.col("src" if forward else "dst") == ground
-        ).select(F.col("dst" if forward else "src").alias(var))
-        if zero:
-            out = out.unionByName(
-                spark.createDataFrame([(ground,)], f"{var} string")
-            ).distinct()
-        return out
     if zero:
-        nodes = (
-            quads.select(F.col("s").alias("src"))
-            .unionByName(quads.select(F.col("o").alias("src")))
-            .distinct()
-        )
-        pairs = pairs.unionByName(
-            nodes.select("src", F.col("src").alias("dst"))
-        ).distinct()
-    if s_var == o_var:
-        return pairs.filter(F.col("src") == F.col("dst")).select(
-            F.col("src").alias(s_var)
-        )
-    return pairs.select(
-        F.col("src").alias(s_var), F.col("dst").alias(o_var)
+        graphs = _path_graphs(quads, graph_var)
+        if s_var is None and o_var is None:
+            if pat.s == pat.o:
+                if graph_var is None:
+                    return graphs  # pure existence: one zero-column row
+                return graphs.select(F.col("g").alias(graph_var))
+        elif s_var is None or o_var is None:
+            t = _path_key(
+                F.col("g"), F.lit(pat.s if s_var is None else pat.o),
+                graph_var,
+            )
+            pairs = pairs.unionByName(
+                graphs.select(t.alias("src"), t.alias("dst"))
+            ).distinct()
+        else:
+            nodes = (
+                quads.select(
+                    _path_key(F.col("g"), F.col("s"), graph_var).alias("src")
+                )
+                .unionByName(
+                    quads.select(
+                        _path_key(F.col("g"), F.col("o"), graph_var)
+                        .alias("src")
+                    )
+                )
+                .distinct()
+            )
+            pairs = pairs.unionByName(
+                nodes.select("src", F.col("src").alias("dst"))
+            ).distinct()
+
+    def node(c: str) -> Column:
+        return F.col(c) if graph_var is None else F.col(c).getField("n")
+
+    positions = (
+        [] if graph_var is None else [(graph_var, F.col("src").getField("g"))]
     )
-
-
-def _scan_path_expr(quads: DataFrame, pat: Pattern) -> DataFrame:
-    """Compile a compound path pattern (sequence / alternative / inverse /
-    negated set, modifiers on any element) via the pair-relation evaluator.
-
-    A TOP-LEVEL closure with a ground endpoint (e.g.
-    ``<root> ^<parent>+ ?d`` or ``<x> (<a>/<b>)* ?y``) takes the
-    directional frontier BFS over the composed single-step relation —
-    never the global closure-then-filter, which would materialize every
-    connected pair of the graph to keep one source."""
-    node = pat.pexpr
-    s_ground = not pat.s.startswith("?")
-    o_ground = not pat.o.startswith("?")
-    if (
-        isinstance(node, PMod)
-        and node.op in ("*", "+")
-        and (s_ground or o_ground)
+    for var, col, ground in (
+        (s_var, node("src"), pat.s),
+        (o_var, node("dst"), pat.o),
     ):
-        inner_pairs, inner_zero = _path_pairs(quads, node.inner)
-        edges = fixpoint.checkpoint(inner_pairs.distinct())
-        # (P ∪ id)+ = P*: an inner zero component upgrades + to *
-        op = "*" if (node.op == "*" or inner_zero) else "+"
-        return _path_with_edges(quads, pat, edges, op)
-    pairs, zero = _path_pairs(quads, node)
-    return _bind_path_endpoints(quads, pat, pairs, zero)
+        if var is None:
+            pairs = pairs.filter(col == ground)
+        else:
+            positions.append((var, col))
+    # a variable repeated across positions binds once, filtered to equality
+    out_cols: dict[str, Column] = {}
+    for var, col in positions:
+        if var in out_cols:
+            pairs = pairs.filter(out_cols[var] == col)
+        else:
+            out_cols[var] = col
+    return pairs.select(*[c.alias(v) for v, c in out_cols.items()])
 
 
 def _join(left: DataFrame | None, right: DataFrame, how: str = "inner") -> DataFrame:
@@ -1998,6 +1826,31 @@ def _join(left: DataFrame | None, right: DataFrame, how: str = "inner") -> DataF
     return left.crossJoin(right)
 
 
+def _compat(
+    right: DataFrame, shared: list[str], nullable: set[str]
+) -> tuple[DataFrame, Column]:
+    """The one SPARQL compatibility condition: ``right`` with every column
+    renamed ``_r_{c}``, and the condition that a left row agrees with it on
+    ``shared``. HASH-FIRST: a shared column that can never be unbound (not
+    in ``nullable``) is a plain equality, which Catalyst extracts as a
+    hash-join KEY; only a genuinely nullable column keeps the
+    unbound-matches-anything form. With at least one always-bound shared
+    column the join plans as a hash join with a residual filter instead of
+    a BroadcastNestedLoopJoin of two arbitrarily large frames — the
+    skew-robust equi-join of *CPU and GPU Hash Joins on Skewed Data*
+    (ICDE 2024). An all-nullable shared domain keeps the theta fallback:
+    there is no key to hash on."""
+    rr = right.select(*[F.col(c).alias(f"_r_{c}") for c in right.columns])
+    cond = F.lit(True)
+    for c in shared:
+        lc, rc = F.col(c), F.col(f"_r_{c}")
+        eq = lc == rc
+        if c in nullable:
+            eq = lc.isNull() | rc.isNull() | eq
+        cond = cond & eq
+    return rr, cond
+
+
 def _minus(
     left: DataFrame, right: DataFrame, slow_cols: set[str]
 ) -> DataFrame:
@@ -2015,28 +1868,16 @@ def _minus(
     r = right.select(*shared).dropDuplicates()
     if not (slow_cols & set(shared)):
         return left.join(r, shared, "left_anti")
-    rr = r.select(*[F.col(c).alias(f"_r_{c}") for c in shared])
-    # HASH-FIRST null-aware anti join: shared columns that can never be
-    # unbound (not in slow_cols) are written as plain equalities, which
-    # Catalyst extracts as hash-join KEYS; only the genuinely nullable
-    # residual keeps the null-compatible form. With at least one
-    # always-bound shared column this plans as a hash anti join with a
-    # residual filter instead of a BroadcastNestedLoopJoin of two
-    # arbitrarily large frames (the overlap disjunct is then implied:
-    # a matched pair co-binds that column). All-nullable shared domains
-    # keep the theta fallback — there is no key to hash on.
-    bound = [c for c in shared if c not in slow_cols]
-    compat = F.lit(True)
-    for c in bound:
-        compat = compat & (F.col(c) == F.col(f"_r_{c}"))
-    overlap = F.lit(True) if bound else F.lit(False)
-    for c in shared:
-        if c in bound:
-            continue
-        lc, rc = F.col(c), F.col(f"_r_{c}")
-        compat = compat & (lc.isNull() | rc.isNull() | (lc == rc))
-        if not bound:
-            overlap = overlap | (lc.isNotNull() & rc.isNotNull())
+    rr, compat = _compat(r, shared, slow_cols)
+    # a matched pair co-binds any always-bound shared column, so the
+    # overlap disjunct is implied unless every shared column is nullable
+    overlap = F.lit(True)
+    if set(shared) <= slow_cols:
+        overlap = F.lit(False)
+        for c in shared:
+            overlap = overlap | (
+                F.col(c).isNotNull() & F.col(f"_r_{c}").isNotNull()
+            )
     return left.join(rr, compat & overlap, "left_anti")
 
 
@@ -2058,75 +1899,33 @@ def _exists_join(
     r = right.select(*shared).dropDuplicates()
     if not (slow_cols & set(shared)):
         return left.join(r, shared, how)
-    rr = r.select(*[F.col(c).alias(f"_r_{c}") for c in shared])
-    # hash-first (see _minus): always-bound shared columns become plain
-    # equalities = extractable hash keys; only nullable columns keep the
-    # null-matches-anything residual, so two large frames meet in a hash
-    # semi/anti join instead of a BroadcastNestedLoopJoin whenever at
-    # least one shared variable is provably always bound
-    bound = [c for c in shared if c not in slow_cols]
-    cond = F.lit(True)
-    for c in shared:
-        lc, rc = F.col(c), F.col(f"_r_{c}")
-        if c in bound:
-            cond = cond & (lc == rc)
-        else:
-            cond = cond & (lc.isNull() | rc.isNull() | (lc == rc))
+    rr, cond = _compat(r, shared, slow_cols)
     return left.join(rr, cond, how)
-
-
-def _compat_inner_join(
-    frame: DataFrame, right: DataFrame, nullable_cols: set[str] = frozenset()
-) -> DataFrame:
-    """Inner join under SPARQL join compatibility when a shared variable
-    can be UNBOUND (null) on either side: null matches anything, and the
-    merged binding keeps whichever side was bound (coalesce). Only used
-    when nullability is actually possible — the always-bound case stays a
-    plain hash join on the shared columns. Shared columns NOT in
-    ``nullable_cols`` are written as plain equalities so Catalyst extracts
-    them as hash-join keys (see _minus) — the theta form survives only on
-    the genuinely nullable residual."""
-    shared = [c for c in frame.columns if c in right.columns]
-    new_cols = [c for c in right.columns if c not in shared]
-    if not shared:
-        return frame.crossJoin(right)
-    keep = list(frame.columns)
-    rv = right.select(*[F.col(c).alias(f"_v_{c}") for c in right.columns])
-    cond = F.lit(True)
-    for c in shared:
-        lc, rc = F.col(c), F.col(f"_v_{c}")
-        if c in nullable_cols:
-            cond = cond & (lc.isNull() | rc.isNull() | (lc == rc))
-        else:
-            cond = cond & (lc == rc)
-    return frame.join(rv, cond, "inner").select(
-        *[
-            F.coalesce(F.col(c), F.col(f"_v_{c}")).alias(c)
-            if c in shared
-            else F.col(c)
-            for c in keep
-        ],
-        *[F.col(f"_v_{c}").alias(c) for c in new_cols],
-    )
 
 
 def _join_compat(
     frame: DataFrame | None, sub: DataFrame, nullable_cols: set[str]
 ) -> DataFrame:
-    """Join a compiled sub-frame (group / union / subselect result) into
-    the accumulating group frame: the plain `_join` unless a SHARED variable
-    can be unbound on either side, where SPARQL join compatibility requires
-    the null-matches-anything condition + coalesce merge."""
+    """Join a compiled sub-frame (group / union / subselect / VALUES
+    block) into the accumulating group frame: the plain `_join` unless a
+    SHARED variable can be unbound on either side, where SPARQL join
+    compatibility requires the :func:`_compat` condition and a coalesce
+    merge (the merged binding keeps whichever side was bound)."""
     if frame is None:
         return sub
-    shared = set(frame.columns) & set(sub.columns)
-    if shared & nullable_cols:
-        return _compat_inner_join(frame, sub, nullable_cols)
-    return _join(frame, sub)
-
-
-def _compile_group(quads: DataFrame, spark, group: Group) -> DataFrame | None:
-    return _compile_group_mn(quads, spark, group)[0]
+    shared = [c for c in frame.columns if c in sub.columns]
+    if not (set(shared) & nullable_cols):
+        return _join(frame, sub)
+    rr, cond = _compat(sub, shared, nullable_cols)
+    return frame.join(rr, cond, "inner").select(
+        *[
+            F.coalesce(F.col(c), F.col(f"_r_{c}")).alias(c)
+            if c in shared
+            else F.col(c)
+            for c in frame.columns
+        ],
+        *[F.col(f"_r_{c}").alias(c) for c in sub.columns if c not in shared],
+    )
 
 
 def _compile_group_mn(
@@ -2143,23 +1942,12 @@ def _compile_group_mn(
     deferred: list = []  # Filter | ExistsFilter — whole-group scope
     for item in group.items:
         if isinstance(item, Pattern):
-            if item.path is not None or item.pexpr is not None:
-                if graph_var is not None:
-                    frame = _join(
-                        frame,
-                        _scan_path_g(quads, item, graph_var)
-                        if item.pexpr is None
-                        else _scan_path_expr_g(quads, item, graph_var),
-                    )
-                else:
-                    frame = _join(
-                        frame,
-                        _scan_path(quads, item)
-                        if item.pexpr is None
-                        else _scan_path_expr(quads, item),
-                    )
-            else:
-                frame = _join(frame, _scan(quads, item, graph_var))
+            frame = _join(
+                frame,
+                _scan(quads, item, graph_var)
+                if item.pexpr is None
+                else _scan_path(quads, item, graph_var),
+            )
         elif isinstance(item, GraphScope):
             if item.term.startswith("?"):
                 # named graphs only: the engine's null-graph sentinel (and
@@ -2228,29 +2016,14 @@ def _compile_group_mn(
             if frame is None:
                 # BIND over the empty group: ONE empty solution, extended
                 frame = spark.range(1).select()
-            found: list = []
-            bind_expr = _extract_exists(item.expr, found)
-            if found:
-                # [NOT] EXISTS embedded in the BIND value (bare, or as an
-                # IF condition): precompute each as a boolean marker over
-                # the current frame, evaluate the rewritten expression,
-                # then drop the markers — same composition rule as FILTER
-                keep_cols = list(frame.columns)
-                for name, grp in found:
-                    inner, inner_mn = _compile_group_mn(
-                        quads, spark, grp, graph_var
-                    )
-                    if inner is None:
-                        raise SparqlSyntaxError("empty EXISTS group")
-                    frame = _exists_marker(
-                        frame, inner, name, maybe_null | inner_mn
-                    )
+            keep = list(frame.columns)
+            frame, bind_expr = _hoist_exists(
+                frame, item.expr, quads, spark, graph_var, maybe_null
+            )
             col, _ = _value_as_term_or_num(
                 bind_expr, set(frame.columns), _numeric_dtype_cols(frame)
             )
-            frame = frame.withColumn(item.var, col)
-            if found:
-                frame = frame.select(*keep_cols, item.var)
+            frame = frame.select(*keep, col.alias(item.var))
             # expression errors surface as null ⇒ the var may be unbound
             maybe_null.add(item.var)
         elif isinstance(item, MultiValues):
@@ -2264,42 +2037,11 @@ def _compile_group_mn(
                 for i in range(len(item.vars))
                 if r[i] is None
             }
-            if frame is None:
-                frame = vf
-                maybe_null |= undef_cols
-                continue
-            shared = [c for c in frame.columns if c in vf.columns]
-            new_cols = [c for c in vf.columns if c not in shared]
-            if not shared:
-                frame = frame.crossJoin(vf)
-                maybe_null |= undef_cols
-            elif not (undef_cols & set(shared)) and not (
-                maybe_null & set(shared)
-            ):
-                frame = frame.join(vf, shared, "inner")
-                maybe_null |= undef_cols & set(new_cols)
-            else:
-                # UNDEF (or an OPTIONAL-null binding) on a shared variable:
-                # SPARQL join compatibility — unbound on either side
-                # matches anything; the merged binding keeps the bound one
-                keep = list(frame.columns)
-                rv = vf.select(
-                    *[F.col(c).alias(f"_v_{c}") for c in vf.columns]
-                )
-                cond = F.lit(True)
-                for c in shared:
-                    lc, rc = F.col(c), F.col(f"_v_{c}")
-                    cond = cond & (lc.isNull() | rc.isNull() | (lc == rc))
-                frame = frame.join(rv, cond, "inner").select(
-                    *[
-                        F.coalesce(F.col(c), F.col(f"_v_{c}")).alias(c)
-                        if c in shared
-                        else F.col(c)
-                        for c in keep
-                    ],
-                    *[F.col(f"_v_{c}").alias(c) for c in new_cols],
-                )
-                maybe_null |= undef_cols
+            # UNDEF (or an OPTIONAL-null binding) on a shared variable:
+            # SPARQL join compatibility — unbound on either side matches
+            # anything; the merged binding keeps the bound one
+            frame = _join_compat(frame, vf, maybe_null | undef_cols)
+            maybe_null |= undef_cols
         elif isinstance(item, (Filter, ExistsFilter)):
             deferred.append(item)
         else:  # pragma: no cover
@@ -2320,13 +2062,18 @@ def _compile_group_mn(
     return frame, maybe_null
 
 
-def _extract_exists(e: Expr, found: list) -> Expr:
+def _extract_exists(e: Expr, found: list, taken: set[str]) -> Expr:
     """Rebuild a FILTER expression tree, replacing every ``exists`` node
     with a reference to a precomputed boolean marker column (appended to
-    ``found`` as (name, group)). A NEGATIVE exists becomes NOT over the
-    positive marker."""
+    ``found`` as (name, group)), named by the first ``_ex_{i}`` not in
+    ``taken`` (which then records it). A NEGATIVE exists becomes NOT over
+    the positive marker."""
     if e.op == "exists":
-        name = f"_ex_{len(found)}"
+        i = 0
+        while f"_ex_{i}" in taken:
+            i += 1
+        name = f"_ex_{i}"
+        taken.add(name)
         found.append((name, e.args[0]))
         marker = Expr("marker", [name])
         return marker if e.args[1] else Expr("not", [marker])
@@ -2334,9 +2081,36 @@ def _extract_exists(e: Expr, found: list) -> Expr:
         return e
     return Expr(
         e.op,
-        [_extract_exists(a, found) if isinstance(a, Expr) else a
+        [_extract_exists(a, found, taken) if isinstance(a, Expr) else a
          for a in e.args],
     )
+
+
+def _hoist_exists(
+    frame: DataFrame,
+    expr: Expr,
+    quads: DataFrame,
+    spark,
+    graph_var: str | None,
+    slow_cols: set[str],
+) -> tuple[DataFrame, Expr]:
+    """Hoist every [NOT] EXISTS embedded in ``expr`` (FILTER, BIND, HAVING
+    or a SELECT expression) to a boolean marker column on ``frame``: each
+    inner group compiles in the caller's scope — the active graph
+    included — and attaches via :func:`_exists_marker`, null-aware on
+    ``slow_cols``. Returns the frame and ``expr`` rewritten to read the
+    markers, so EXISTS composes with &&/||/!/IF like any other boolean;
+    the caller's final projection drops the markers. Marker names are
+    fresh per frame, so several expressions can hoist onto one frame.
+    Without EXISTS both come back unchanged."""
+    found: list = []
+    expr = _extract_exists(expr, found, set(frame.columns))
+    for name, grp in found:
+        inner, inner_mn = _compile_group_mn(quads, spark, grp, graph_var)
+        if inner is None:
+            raise SparqlSyntaxError("empty EXISTS group")
+        frame = _exists_marker(frame, inner, name, slow_cols | inner_mn)
+    return frame, expr
 
 
 def _exists_marker(
@@ -2352,7 +2126,7 @@ def _exists_marker(
     - always-bound shared domain → deduplicated inner keys left-joined on
       the shared columns (one hash join, no fan-out because the probe side
       is distinct);
-    - nullable shared domain → per-row id + compatibility-condition join,
+    - nullable shared domain → per-row id + :func:`_compat` join,
       distinct matched ids re-joined (the id pinned by localCheckpoint so
       both references see the same values)."""
     shared = [
@@ -2369,11 +2143,7 @@ def _exists_marker(
     tagged = frame.withColumn(
         rid, F.monotonically_increasing_id()
     ).localCheckpoint()
-    rr = r.select(*[F.col(c).alias(f"_r_{c}") for c in shared])
-    cond = F.lit(True)
-    for c in shared:
-        lc, rc = F.col(c), F.col(f"_r_{c}")
-        cond = cond & (lc.isNull() | rc.isNull() | (lc == rc))
+    rr, cond = _compat(r, shared, slow_cols)
     matched = (
         tagged.join(rr, cond, "inner")
         .select(F.col(rid).alias(rid))  # fresh attribute id (self-join)
@@ -2391,29 +2161,15 @@ def _apply_filter(
     maybe_null: set[str],
     graph_var: str | None,
 ) -> DataFrame:
-    """Apply one FILTER expression. When the tree embeds [NOT] EXISTS
-    operands, each inner group compiles to a boolean marker column first
-    (_exists_marker), the rewritten tree filters over the markers, and the
-    markers are dropped — so EXISTS composes with &&/||/! like any other
-    boolean. The common no-EXISTS tree stays a single filter() call."""
-    found: list = []
-    new_expr = _extract_exists(expr, found)
-    if not found:
-        return frame.filter(
-            _compile_expr(
-                expr, set(frame.columns),
-                numeric_cols=_numeric_dtype_cols(frame),
-            )
-        )
+    """Apply one FILTER expression; embedded [NOT] EXISTS operands filter
+    over hoisted marker columns (:func:`_hoist_exists`), which the final
+    projection drops."""
     keep = list(frame.columns)
-    for name, grp in found:
-        inner, inner_mn = _compile_group_mn(quads, spark, grp, graph_var)
-        if inner is None:
-            raise SparqlSyntaxError("empty EXISTS group")
-        frame = _exists_marker(frame, inner, name, maybe_null | inner_mn)
+    frame, expr = _hoist_exists(
+        frame, expr, quads, spark, graph_var, maybe_null
+    )
     cond = _compile_expr(
-        new_expr, set(frame.columns),
-        numeric_cols=_numeric_dtype_cols(frame),
+        expr, set(frame.columns), numeric_cols=_numeric_dtype_cols(frame)
     )
     return frame.filter(cond).select(*keep)
 
@@ -2469,21 +2225,21 @@ def _expr_vars(e: Expr) -> set[str]:
 def _compile_aggregate(
     frame: DataFrame,
     q: Query,
-    quads: DataFrame | None = None,
-    spark=None,
-    maybe_null: set[str] = frozenset(),
-    graph_var: str | None = None,
+    quads: DataFrame,
+    spark,
+    maybe_null: set[str],
+    graph_var: str | None,
 ) -> DataFrame:
     """GROUP BY / aggregate projection: one groupBy().agg() — Spark's
     partial (map-side) aggregation applies automatically, so a COUNT over
     10^12 rows shuffles one partial row per (partition, group).
 
-    ``quads``/``spark`` carry the dataset context so a HAVING expression
-    may embed ``[NOT] EXISTS { ... }``: each existence test compiles to a
-    boolean marker column over the GROUPED frame (_exists_marker — the
-    inner pattern correlates on shared column names, i.e. group keys and,
-    if the inner pattern happens to use them, aggregate aliases), the
-    rewritten HAVING filters over the markers, and the markers drop out.
+    ``quads``/``spark`` carry the dataset context so HAVING and SELECT
+    expressions may embed ``[NOT] EXISTS { ... }``: each existence test
+    becomes a boolean marker column over the GROUPED frame
+    (:func:`_hoist_exists` — the inner pattern correlates on shared column
+    names, i.e. group keys and, if the inner pattern happens to use them,
+    aggregate aliases), and the markers drop out with the projection.
 
     ``graph_var`` set (a subquery under ``GRAPH ?var``) makes the bound
     graph column an IMPLICIT group key — the aggregation evaluates
@@ -2537,71 +2293,33 @@ def _compile_aggregate(
         grouped = frame.groupBy(*gb).agg(
             *[_agg_col(a, cols) for a in aggs]
         )
+    # nullability over the grouped frame: OPTIONAL-born group keys plus
+    # non-COUNT aggregate aliases (null on all-null groups)
+    grouped_mn = (maybe_null & set(q.group_by)) | {
+        a.alias for a in aggs if a.func != "COUNT"
+    }
     if q.having is not None:
         # HAVING scope: group keys + aggregate aliases, BEFORE projection;
         # alias columns are already numeric — no term-string decode
-        found: list = []
-        new_having = _extract_exists(q.having, found)
-        if found:
-            if quads is None:
-                raise SparqlSyntaxError(
-                    "EXISTS in HAVING needs a dataset context"
-                )
-            # nullability for the marker join: OPTIONAL-born group keys
-            # plus non-COUNT aggregate aliases (null on all-null groups)
-            having_mn = (maybe_null & set(q.group_by)) | {
-                a.alias for a in aggs if a.func != "COUNT"
-            }
-            keep = list(grouped.columns)
-            for name, grp in found:
-                inner, inner_mn = _compile_group_mn(
-                    quads, spark, grp, graph_var
-                )
-                if inner is None:
-                    raise SparqlSyntaxError("empty EXISTS group")
-                grouped = _exists_marker(
-                    grouped, inner, name, having_mn | inner_mn
-                )
-            grouped = grouped.filter(
-                _compile_expr(
-                    new_having,
-                    set(grouped.columns),
-                    numeric_cols=_numeric_dtype_cols(grouped),
-                )
-            ).select(*keep)
-        else:
-            grouped = grouped.filter(
-                _compile_expr(
-                    q.having,
-                    set(grouped.columns),
-                    numeric_cols=_numeric_dtype_cols(grouped),
-                )
-            )
-    # hoist [NOT] EXISTS embedded in grouped expression projections to
-    # marker columns over the GROUPED frame (the final select drops them)
-    ex_found: list = []
-    sel_items = [
-        (kind, (_extract_exists(item[0], ex_found), item[1]))
-        if kind == "expr"
-        else (kind, item)
-        for kind, item in q.select_items
-    ]
-    for name, grp in ex_found:
-        if quads is None:
-            raise SparqlSyntaxError(
-                "EXISTS in a SELECT expression needs a dataset context"
-            )
-        inner, inner_mn = _compile_group_mn(quads, spark, grp, graph_var)
-        if inner is None:
-            raise SparqlSyntaxError("empty EXISTS group")
-        grouped = _exists_marker(
-            grouped,
-            inner,
-            name,
-            (maybe_null & set(q.group_by))
-            | {a.alias for a in aggs if a.func != "COUNT"}
-            | inner_mn,
+        keep = list(grouped.columns)
+        grouped, having = _hoist_exists(
+            grouped, q.having, quads, spark, graph_var, grouped_mn
         )
+        grouped = grouped.filter(
+            _compile_expr(
+                having,
+                set(grouped.columns),
+                numeric_cols=_numeric_dtype_cols(grouped),
+            )
+        ).select(*keep)
+    sel_items = []
+    for kind, item in q.select_items:
+        if kind == "expr":
+            grouped, e = _hoist_exists(
+                grouped, item[0], quads, spark, graph_var, grouped_mn
+            )
+            item = (e, item[1])
+        sel_items.append((kind, item))
     gcols = set(grouped.columns)
     gnum = _numeric_dtype_cols(grouped)
     projection = []
@@ -2691,7 +2409,7 @@ def run_sparql(quads: DataFrame, text: str, hide_hk: bool = False) -> DataFrame:
         base = filter_hk(base)
 
     if q.form == "ask":
-        frame = _compile_group(base, spark, q.where)
+        frame = _compile_group_mn(base, spark, q.where)[0]
         if frame is None:
             raise SparqlSyntaxError("empty ASK group")
         return frame.agg(F.count(F.lit(1)).alias("_n")).select(
@@ -2705,7 +2423,7 @@ def run_sparql(quads: DataFrame, text: str, hide_hk: bool = False) -> DataFrame:
         if var_terms:
             if q.where is None:
                 raise SparqlSyntaxError("DESCRIBE ?var requires a WHERE group")
-            frame = _compile_group(base, spark, q.where)
+            frame = _compile_group_mn(base, spark, q.where)[0]
             if frame is None:
                 raise SparqlSyntaxError("empty WHERE group")
             for v in var_terms:
@@ -2724,7 +2442,7 @@ def run_sparql(quads: DataFrame, text: str, hide_hk: bool = False) -> DataFrame:
         ).select("s", "p", "o", "g")
 
     if q.form == "construct":
-        frame = _compile_group(base, spark, q.where)
+        frame = _compile_group_mn(base, spark, q.where)[0]
         if frame is None:
             raise SparqlSyntaxError("empty WHERE group")
         cols = set(frame.columns)
@@ -2796,10 +2514,7 @@ def _compile_select_mn(
         raise SparqlSyntaxError("WHERE binds no variables")
     gv_bound = graph_var is not None and graph_var in frame.columns
     if q.group_by or any(kind == "agg" for kind, _ in q.select_items):
-        out = _compile_aggregate(
-            frame, q, quads=base, spark=spark, maybe_null=mn,
-            graph_var=graph_var,
-        )
+        out = _compile_aggregate(frame, q, base, spark, mn, graph_var)
         out_mn = set()
         for kind, item in q.select_items:
             if kind == "var" and item in mn:
@@ -2814,21 +2529,16 @@ def _compile_select_mn(
         if q.having is not None:
             raise SparqlSyntaxError("HAVING requires GROUP BY or aggregates")
         if any(kind == "expr" for kind, _ in q.select_items):
-            # hoist [NOT] EXISTS embedded in expression projections to
-            # boolean marker columns first (same rule as FILTER/BIND); the
-            # final select projects only the aliases, dropping the markers
-            ex_found: list = []
-            sel_items = [
-                (kind, (_extract_exists(item[0], ex_found), item[1]))
-                if kind == "expr"
-                else (kind, item)
-                for kind, item in q.select_items
-            ]
-            for name, grp in ex_found:
-                inner, inner_mn = _compile_group_mn(base, spark, grp)
-                if inner is None:
-                    raise SparqlSyntaxError("empty EXISTS group")
-                frame = _exists_marker(frame, inner, name, mn | inner_mn)
+            # the final select projects only the aliases, dropping any
+            # hoisted EXISTS markers
+            sel_items = []
+            for kind, item in q.select_items:
+                if kind == "expr":
+                    frame, e = _hoist_exists(
+                        frame, item[0], base, spark, graph_var, mn
+                    )
+                    item = (e, item[1])
+                sel_items.append((kind, item))
             cols = set(frame.columns)
             numeric = _numeric_dtype_cols(frame)
             projection, seen = [], set()

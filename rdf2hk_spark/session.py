@@ -6,9 +6,12 @@ partitions sized to the parallelism level instead of the 200 default.
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import SparkSession
+
+log = logging.getLogger("rdf2hk_spark")
 
 
 def _default_driver_memory() -> str:
@@ -51,8 +54,9 @@ def materialize_pending_caches(df) -> int:
 
     Best-effort: reaches into the JVM plan (stable Spark 4 internals —
     ``InMemoryRelation.cacheBuilder.isCachedColumnBuffersLoaded`` is the
-    same surface CacheManager uses); on any reflection surprise it returns
-    early and the caller's plan still computes correctly, just lazily."""
+    same surface CacheManager uses); on any reflection surprise it logs
+    the exception to the ``rdf2hk_spark`` logger and returns 0, and the
+    caller's plan still computes correctly, just lazily."""
     try:
         spark = df.sparkSession
         leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
@@ -67,9 +71,11 @@ def materialize_pending_caches(df) -> int:
                 spark._jsparkSession, leaf
             ).count()
             done += 1
-        return done
     except Exception:
+        log.warning("materialize_pending_caches skipped", exc_info=True)
         return 0
+    log.info("materialize_pending_caches populated %d caches", done)
+    return done
 
 
 def get_spark(

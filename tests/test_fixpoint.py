@@ -1,6 +1,8 @@
 """The shared fixpoint loop: depth bound, compaction, typed error — and the
 JVM-reflection guard for session.materialize_pending_caches."""
 
+import logging
+
 import pytest
 
 from rdf2hk_spark import constants as C, fixpoint
@@ -46,9 +48,11 @@ def test_duplicate_clusters_bound_is_the_shared_typed_error(spark, monkeypatch):
         dedup.duplicate_clusters(pairs)
 
 
-def test_materialize_pending_caches_populates_lazy_persist(spark):
+def test_materialize_pending_caches_populates_lazy_persist(spark, caplog):
     # a Spark upgrade that breaks the JVM plan reflection makes the function
-    # return 0 silently; this pins that it still finds and fills the cache
+    # return 0 (logged, not raised); this pins that it still finds and
+    # fills the cache, and that both outcomes reach the rdf2hk_spark logger
+    caplog.set_level(logging.INFO, logger="rdf2hk_spark")
     cached = spark.range(37).selectExpr("id * 7919 AS x").persist()
     try:
         df = cached.filter("x % 2 = 0")
@@ -56,3 +60,10 @@ def test_materialize_pending_caches_populates_lazy_persist(spark):
         assert materialize_pending_caches(df) == 0
     finally:
         cached.unpersist()
+    assert "populated 1 caches" in caplog.text
+    assert not any(r.exc_info for r in caplog.records)
+    # not a DataFrame: the reflection fails, is logged with its traceback,
+    # and the function still reports 0
+    assert materialize_pending_caches(object()) == 0
+    failed = [r for r in caplog.records if r.exc_info]
+    assert len(failed) == 1 and failed[0].levelno == logging.WARNING

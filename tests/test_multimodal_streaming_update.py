@@ -1,97 +1,19 @@
-"""Multimodal plumbing, streaming ingestion, and update-diff tests."""
+"""Streaming ingestion and update-diff tests."""
 
 import datetime
 import os
 import time
 
-import pytest
 from pyspark.sql import functions as F
 
 from rdf2hk_spark import constants as C
 from rdf2hk_spark.operators.parse import ParseOptions, parse_quads
 from rdf2hk_spark.operators.serialize import SerializeOptions
 from rdf2hk_spark.operators import update_diff
-from rdf2hk_spark.ops import multimodal, similarity
 from rdf2hk_spark.pipeline import corpus
 from rdf2hk_spark.streaming import ingest
 
 QUAD_SCHEMA = "stmt_idx long, s string, p string, o string, g string"
-
-
-class TestMultimodal:
-    def test_media_schema_and_determinism(self, spark):
-        m1 = multimodal.synthetic_media(spark, 30)
-        m2 = multimodal.synthetic_media(spark, 30)
-        assert dict(m1.dtypes)["payload"] == "binary"
-        assert m1.select("media_id", "sha256").exceptAll(
-            m2.select("media_id", "sha256")
-        ).count() == 0
-
-    def test_feature_extraction_batch_shape(self, spark):
-        # use_codecs=False pins the deterministic fake path (synthetic
-        # payloads are not decodable media)
-        m = multimodal.synthetic_media(spark, 30)
-        feats = multimodal.extract_features(m, dim=16, use_codecs=False)
-        rows = feats.collect()
-        assert len(rows) == 30
-        assert all(len(r["feature"]) == 16 for r in rows)
-        # unit-norm (stub decoder is deterministic → stable features)
-        import math
-        n = math.sqrt(sum(x * x for x in rows[0]["feature"]))
-        assert abs(n - 1.0) < 1e-3
-        # features feed the ANN operator unchanged
-        e = feats.select(F.col("media_id").alias("vec_id"),
-                         F.col("feature").alias("embedding"))
-        topk = similarity.cosine_topk(e, e.filter(F.col("vec_id") < 3), k=2)
-        assert topk.count() == 6
-
-    def test_resize_filters_to_images(self, spark):
-        m = multimodal.synthetic_media(spark, 30)
-        out = multimodal.resize_images(m, 32, 32, use_codecs=False)
-        assert out.count() == m.filter(F.col("mime") == "image/png").count()
-        assert set(out.columns) == {"media_id", "payload", "width", "height"}
-
-    def test_codec_probe_shape(self):
-        caps = multimodal.codec_caps()
-        assert set(caps) == {"image", "audio", "video"}
-        assert all(isinstance(v, bool) for v in caps.values())
-
-    @pytest.mark.skipif(
-        not multimodal.codec_caps()["image"], reason="Pillow not installed"
-    )
-    def test_real_image_codec_path(self, spark):
-        """With Pillow present: a REAL png decodes through the real path —
-        features derive from actual pixel data, resize returns an exact
-        width×height greyscale raster."""
-        import io
-
-        from PIL import Image
-
-        def png(color):
-            im = Image.new("RGB", (8, 6), color)
-            buf = io.BytesIO()
-            im.save(buf, format="PNG")
-            return buf.getvalue()
-
-        rows = [
-            (0, "image/png", png((255, 0, 0)), 8, 6, 0, "h0"),
-            (1, "image/png", png((0, 0, 255)), 8, 6, 0, "h1"),
-        ]
-        m = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
-        feats = {r["media_id"]: r["feature"]
-                 for r in multimodal.extract_features(m, dim=8, use_codecs=True).collect()}
-        assert len(feats) == 2
-        rs = multimodal.resize_images(m, 4, 3, use_codecs=True).collect()
-        assert all(len(bytes(r["payload"])) == 4 * 3 for r in rs)
-
-    def test_frame_sampling(self, spark):
-        m = multimodal.synthetic_media(spark, 30)
-        frames = multimodal.sample_frames(m, every_ms=5000)
-        vids = m.filter(F.col("mime") == "video/mp4")
-        assert frames.select("media_id").distinct().count() == vids.count()
-        r = frames.filter(F.col("media_id") == frames.first()["media_id"])
-        idxs = sorted(x["frame_idx"] for x in r.collect())
-        assert idxs == list(range(len(idxs)))
 
 
 class TestStreamingIngest:

@@ -44,6 +44,27 @@ def test_extraction_byte_identical_per_url(spark, pages_df):
     assert joined.filter(F.col("extracted_text") != F.col("t2")).count() == 0
 
 
+def test_extract_invalid_utf8_batch_falls_back_per_batch():
+    """A batch mixing a valid page with an invalid-UTF-8 page raises
+    ArrowInvalid in the Arrow chain; the fallback still returns one text
+    per row, the bad byte decoded as U+FFFD."""
+    import pandas as pd
+
+    out = extract.extract_text_udf.func(pd.Series([b"<p>ok</p>", b"\xff"]))
+    assert list(out) == ["ok", "\ufffd"]
+
+
+def test_extract_unrelated_error_propagates(monkeypatch):
+    import pandas as pd
+
+    def broken(html):
+        raise RuntimeError("not an Arrow data error")
+
+    monkeypatch.setattr(extract, "_extract_arrow", broken)
+    with pytest.raises(RuntimeError, match="not an Arrow data error"):
+        extract.extract_text_udf.func(pd.Series([b"<p>ok</p>"]))
+
+
 def test_relation_extraction_precision_recall(spark, pages_df):
     ext = extract.extract_text(pages_df)
     cat = corpus.catalog(spark)

@@ -1,6 +1,8 @@
 """SPARQL-text surface (plans/sparql.py): parse + compile onto the quads
 frame; the setHKFiltered (Q12) hiding semantic; P12 literal unescape."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -2034,6 +2036,24 @@ class TestExistsInBooleanExpr:
             ("<http://e/b>", '"y"'),
         ]
 
+    def test_select_expr_exists_sees_active_graph(self, spark):
+        # the EXISTS of a subquery's SELECT expression under GRAPH ?g must
+        # test the graph the row was found in: <a> <p> ?o exists only in g2
+        q = spark.createDataFrame(
+            [
+                (0, "<a>", "<q>", "<x>", "<http://g/1>"),
+                (1, "<a>", "<p>", "<y>", "<http://g/2>"),
+            ],
+            QUAD_SCHEMA,
+        )
+        out = run_sparql(
+            q,
+            "SELECT ?g ?s ?e WHERE { GRAPH ?g { { SELECT ?s"
+            " (EXISTS { ?s <p> ?o } AS ?e) WHERE { ?s <q> ?x } } } }",
+        )
+        f = '"false"^^<http://www.w3.org/2001/XMLSchema#boolean>'
+        assert rows(out) == [("<http://g/1>", "<a>", f)]
+
     def test_pure_exists_still_fast_path(self, quads):
         from rdf2hk_spark.plans.sparql import parse_sparql
         from rdf2hk_spark.plans import sparql as S
@@ -2092,6 +2112,27 @@ class TestHashFirstNullAwareJoins:
         # k matches; a removed (agrees), b removed (v unbound on left
         # agrees with any), c survives (no right k=c)
         assert sorted(r["k"] for r in out.collect()) == ["c"]
+
+    def test_values_undef_with_bound_shared_var_uses_hash_join(self, spark):
+        q = spark.createDataFrame(
+            [
+                (0, "<a>", "<p>", "<x>", "<http://g/1>"),
+                (1, "<b>", "<p>", "<y>", "<http://g/1>"),
+                (2, "<b>", "<p>", "<z>", "<http://g/1>"),
+            ],
+            QUAD_SCHEMA,
+        )
+        out = run_sparql(
+            q,
+            "SELECT ?s ?o WHERE { ?s <p> ?o ."
+            " VALUES (?s ?o) { (<a> UNDEF) (<b> <y>) } }",
+        )
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "BroadcastNestedLoopJoin" not in plan, plan
+        # an equi-join keyed on the always-bound ?s (hash table or
+        # hash-partitioned sort-merge, by size), ?o only in the residual
+        assert re.search(r"(HashJoin|SortMergeJoin) \[s#\d+\]", plan), plan
+        assert rows(out) == [("<a>", "<x>"), ("<b>", "<y>")]
 
     def test_all_nullable_keeps_theta_fallback_and_semantics(self, spark):
         from rdf2hk_spark.plans.sparql import _minus
@@ -2166,3 +2207,57 @@ class TestGroundEndpointGraphVarSeededBfs:
             ("<http://g/2>", "<a>"),
             ("<http://g/2>", "<d>"),
         ]
+
+    def test_compound_ground_closure_never_builds_full_closure(
+        self, pathg, monkeypatch
+    ):
+        from rdf2hk_spark.plans import sparql as S
+
+        monkeypatch.setattr(
+            S, "_closure_pairs",
+            lambda e: (_ for _ in ()).throw(AssertionError("full closure")),
+        )
+        out = run_sparql(
+            pathg, "SELECT ?g ?o WHERE { GRAPH ?g { <a> (<p>|<q>)+ ?o } }"
+        )
+        assert rows(out) == [
+            ("<http://g/1>", "<b>"),
+            ("<http://g/1>", "<c>"),
+            ("<http://g/2>", "<d>"),
+        ]
+
+
+PARITY_ROWS = [
+    (0, "<a>", "<p>", "<b>", "<http://g/1>"),
+    (1, "<b>", "<p>", "<c>", "<http://g/1>"),
+    (2, "<c>", "<q>", "<d>", "<http://g/1>"),
+    (3, "<d>", "<p>", "<e>", "<http://g/1>"),
+]
+
+
+class TestPathGraphVarParity:
+    """Over a dataset holding ONE named graph, a path under GRAPH ?g must
+    answer exactly like the same path in the default graph: the default
+    graph is the one-graph case of the per-graph evaluator."""
+
+    @pytest.fixture(scope="class")
+    def one_graph(self, spark):
+        return spark.createDataFrame(PARITY_ROWS, QUAD_SCHEMA).cache()
+
+    @pytest.mark.parametrize("mod", ["*", "+", "?"])
+    @pytest.mark.parametrize("step", ["<p>", "(<p>|^<q>)"])
+    @pytest.mark.parametrize(
+        "shape", ["<a> {P} ?o", "?s {P} <c>", "<a> {P} <c>", "?s {P} ?o"]
+    )
+    def test_graph_var_matches_default_graph(self, one_graph, step, mod, shape):
+        body = shape.replace("{P}", step + mod)
+        vs = " ".join(t for t in body.split() if t.startswith("?"))
+        if vs:
+            plain = f"SELECT {vs} WHERE {{ {body} }}"
+            graph = f"SELECT {vs} WHERE {{ GRAPH ?g {{ {body} }} }}"
+        else:
+            plain = f"ASK {{ {body} }}"
+            graph = f"ASK {{ GRAPH ?g {{ {body} }} }}"
+        assert rows(run_sparql(one_graph, graph)) == rows(
+            run_sparql(one_graph, plain)
+        )
