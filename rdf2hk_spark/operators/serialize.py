@@ -5,6 +5,9 @@ Distributed re-expression of the reference's serializer
 Z1-Z9 in SURVEY.md §2.5). Every branch of the reference's per-entity switch
 becomes a filtered select over the entities DataFrame; the final quad set is
 the union of the branches with duplicate suppression (rdfgraph.js:179-189).
+``serialize_entities`` runs one Spark job when called: it materializes its
+input with an eager ``localCheckpoint``, as ``parse_quads`` does, so the
+branches read that checkpoint instead of each re-deriving the input.
 
 Output schema: (s, p, o, g) in the reference's string term encoding, plus a
 deterministic hash-derived ``stmt_idx`` so the output can feed ``parse_quads``
@@ -481,9 +484,15 @@ def _hk_reification_quads(
 def serialize_entities(
     entities: DataFrame, opts: SerializeOptions | None = None
 ) -> DataFrame:
-    """The full HK→RDF conversion (serializer.js serialize)."""
+    """The full HK→RDF conversion (serializer.js serialize).
+
+    Runs one Spark job when called: the input is materialized with an eager
+    ``localCheckpoint``, the same input boundary ``parse_quads`` takes. The
+    returned quads frame is lazy over that checkpoint."""
     opts = opts or SerializeOptions()
-    e = entities
+    # six reads below (property/reference rows, links, connectors, ref map, literal
+    # content): a lazy input would re-derive its whole lineage once per read
+    e = entities.localCheckpoint(eager=True)
 
     connectors = e.filter(F.col("type") == C.CONNECTOR)
     ref_map = e.filter(F.col("type") == C.REFERENCE).select(

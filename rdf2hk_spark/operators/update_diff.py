@@ -53,9 +53,8 @@ def update_quads(
     ids = changed_entity_ids(old, new)
     old_c = old.join(ids, "id", "left_semi")
     new_c = new.join(ids, "id", "left_semi")
-    # localCheckpoint: the serialize plans are deep union trees over the
-    # (often already deep) entity lineage — exceptAll over both sides
-    # otherwise multiplies the analyzed-plan size (heap blowup observed)
+    # localCheckpoint: each serialized side is read twice, once by each
+    # exceptAll, and would otherwise run its union tree twice
     oq = serialize_entities(old_c, opts).select("s", "p", "o", "g").localCheckpoint()
     nq = serialize_entities(new_c, opts).select("s", "p", "o", "g").localCheckpoint()
     dels = oq.exceptAll(nq).withColumn("op", F.lit("delete"))

@@ -55,15 +55,18 @@ def _extract_arrow(html: pd.Series):
     """The same extraction chain on Arrow arrays via RE2
     (pyarrow.compute.replace_substring_regex): each pass is one vectorized
     C++ sweep over the batch instead of a per-element Python re.sub loop
-    (guide §4.2 — hand whole batches to native libraries). Byte-identical
-    to ``_extract_series`` on valid-UTF-8 input (verified over the full
-    60k-page bench corpus); RE2 has no backreferences, so the script|style
-    pass is split into one pass per tag — the sequential result differs
-    from the alternation only for pathologically interleaved
-    ``<script><style></script></style>`` nests, which the single-tag
-    semantics ("drop each script/style block") never produces. Raises on
-    invalid UTF-8 (the caller falls back to the pandas chain, which
-    decodes with errors="replace")."""
+    (hand whole batches to native libraries). The final trim is
+    ``utf8_trim_whitespace``, which strips the same Unicode whitespace as
+    ``str.strip()``. On valid-UTF-8 input the output equals
+    ``_extract_series`` except in two documented cases:
+    - RE2 has no backreferences, so the script|style pass is split into
+      one pass per tag; the sequential result differs from the alternation
+      for interleaved ``<script><style></script></style>`` nests;
+    - a tag name that runs into a non-ASCII letter (``<headé>``,
+      ``</ſtyle>``) matches differently, because RE2's ``\\b`` is ASCII-only
+      and its case folding differs from Python's ``re``.
+    Raises on invalid UTF-8 (the caller falls back to the pandas chain,
+    which decodes with errors="replace")."""
     arr = pa.Array.from_pandas(html)
     if pa.types.is_binary(arr.type) or pa.types.is_large_binary(arr.type):
         arr = arr.cast(pa.string())  # ArrowInvalid on bad utf8 → fallback
@@ -82,7 +85,7 @@ def _extract_arrow(html: pd.Series):
     arr = rx(arr, pattern=r"[ \t]+", replacement=" ")
     arr = rx(arr, pattern=r" ?\n ?", replacement="\n")
     arr = rx(arr, pattern=r"\n+", replacement="\n")
-    arr = rx(arr, pattern=r"(?s)^\s+|\s+$", replacement="")
+    arr = pc.utf8_trim_whitespace(arr)
     return arr.to_pandas().astype(object)
 
 

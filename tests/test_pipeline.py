@@ -54,6 +54,36 @@ def test_extract_invalid_utf8_batch_falls_back_per_batch():
     assert list(out) == ["ok", "\ufffd"]
 
 
+_EDGE_WS = ["\u00a0", "\u2028", "\u3000", "\u0085", "\u001c"]
+
+
+def _edge_pages(ws):
+    return [f"<p>{ws}hello{ws}</p>".encode(), f"{ws}<div>hello</div>{ws}".encode()]
+
+
+@pytest.mark.parametrize("ws", _EDGE_WS, ids=[f"U+{ord(c):04X}" for c in _EDGE_WS])
+def test_extract_chains_trim_unicode_whitespace_alike(ws):
+    """Unicode whitespace at a page edge is trimmed by both chains, as
+    ``str.strip()`` trims it."""
+    import pandas as pd
+
+    html = pd.Series(_edge_pages(ws))
+    assert list(extract._extract_arrow(html)) == ["hello", "hello"]
+    assert list(extract._extract_series(html)) == ["hello", "hello"]
+
+
+@pytest.mark.parametrize("ws", _EDGE_WS, ids=[f"U+{ord(c):04X}" for c in _EDGE_WS])
+def test_extract_text_independent_of_batch_mates(ws):
+    """A page's text is the same alone in its batch and in a batch whose
+    invalid-UTF-8 page sends it down the fallback chain."""
+    import pandas as pd
+
+    for page in _edge_pages(ws):
+        alone = extract.extract_text_udf.func(pd.Series([page]))
+        mixed = extract.extract_text_udf.func(pd.Series([page, b"\xff"]))
+        assert list(alone) == [mixed[0]] == ["hello"]
+
+
 def test_extract_unrelated_error_propagates(monkeypatch):
     import pandas as pd
 

@@ -39,6 +39,29 @@ def test_roundtrip_user_triples(spark, fixture_entities):
     )
 
 
+def test_lazy_input_evaluated_once(spark):
+    """serialize_entities materializes its input once: a non-deterministic
+    UDF over the lazy entities frame runs once per entity row, not once per
+    branch that reads the frame."""
+    quads = spark.createDataFrame(FX.quads(), QUAD_SCHEMA)
+    ents = parse_quads(quads, ParseOptions(create_context=True, set_node_context=True))
+    n_rows = ents.count()
+    calls = spark.sparkContext.accumulator(0)
+
+    def counted(v):
+        calls.add(1)
+        return v
+
+    counted_id = F.udf(counted, "string").asNondeterministic()
+    out = serialize_entities(
+        ents.withColumn("id", counted_id("id")),
+        SerializeOptions(convert_hk=False, default_graph=C.HK_NULL_URI),
+    )
+    got = quadset(out)
+    assert calls.value == n_rows == 34
+    assert got == {(s, p, o, g) for _, s, p, o, g in FX.quads()}
+
+
 def test_roundtrip_fixpoint(spark, fixture_entities):
     """parse(serialize(parse(fixture))) == parse(fixture) — entity-level
     fixpoint without reification."""
